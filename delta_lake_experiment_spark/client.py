@@ -38,15 +38,18 @@ Scale design (100 TB / 1000 executors):
 - Scans hand Spark an explicitly pruned file list (log-level min/max
   stats) and an explicit schema; Catalyst then applies predicate
   pushdown, column pruning and vectorized decode per file.
-- COW delete locates affected files with a Spark job over only the
-  *stat-pruned candidate* files (``input_file_name()``), then rewrites
-  just those files in a second distributed job — never a full-table pass.
+- COW delete and update locate affected files with a Spark job over
+  only the *stat-pruned candidate* files (``_metadata.file_path``), then
+  rewrite just those files in a second distributed job — never a
+  full-table pass. Every verb plans its files through ``_plan_files``
+  and publishes Spark-written rewrites through ``_publish_staged``.
 - Log replay is O(commits since last checkpoint), not O(history):
   a checkpoint object is folded every ``checkpoint_interval`` commits.
 """
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import datetime
 import json
@@ -55,7 +58,7 @@ import re
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any, Iterator, Optional, Union
+from typing import Any, Callable, Iterable, Iterator, Optional, Union
 
 from pyspark.errors import ParseException
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -2358,17 +2361,16 @@ actions.DropTable` for why clearing the live set on fold is
             # violating rows). The wrap is a narrow projection, so the
             # per-partition cluster sort is preserved.
             stamped = self._enforce_checks(tx, table, stamped)
-        stamped = self._to_physical(tx, table, stamped, snap)
         begin_remote = getattr(self.store, "begin_remote_staging", None)
         if begin_remote is not None:
             # Remote stores (S3): executors write Parquet into in-bucket
             # staging, the driver publishes via server-side copy — no
             # data bytes ever transit the driver.
-            self._write_dataframe_remote(table, tx, stamped, base, begin_remote())
+            self._write_dataframe_remote(
+                table, tx, self._to_physical(tx, table, stamped, snap), base, begin_remote()
+            )
             self._advance_identity(tx, table, ident_pending, base)
             return
-        staging = self._staging_dir()
-        self._write_parquet_staging(stamped, staging)
         # Advance next_idx past the LARGEST stamp actually written (read
         # from the staged Parquet footers or the distributed stats pass,
         # never the data): a fixed stride would collide once
@@ -2377,10 +2379,7 @@ actions.DropTable` for why clearing the live set on fold is
         # breaking newest-first ordering for the next bulk write in the
         # same tx. The derived maxima are exact at ANY partition count,
         # including AQE skew-splits above the planned count.
-        try:
-            max_idx = self._register_staging(table, tx, staging)
-        finally:
-            _rmtree(staging)
+        max_idx = self._publish_staged(tx, table, stamped, snap)
         tx.next_idx[table] = (max_idx if max_idx is not None else base - 1) + 1
         self._advance_identity(tx, table, ident_pending, base)
 
@@ -2647,6 +2646,35 @@ actions.DropTable` for why clearing the live set on fold is
         if scope not in scopes:
             scopes.append(scope)
 
+    def _plan_files(
+        self,
+        tx: "_Tx",
+        table: str,
+        snap: Snapshot,
+        prune: Optional[dict[str, tuple[Any, Any]]],
+        keep_buckets: "Optional[set[int]]" = None,
+        record_scope: bool = True,
+    ) -> list[str]:
+        """The one read-planning step of scans, DML and selective
+        compaction: the live files a read of ``table`` under the
+        logical-name ``prune`` can touch. The prune goes logical ->
+        physical, the point-lookup bucket cut (_bucket_prune_ids)
+        composes with a caller-supplied exact ``keep_buckets`` (MERGE's
+        source-key cut) by intersection, and the predicate is recorded
+        as this tx's read scope BEFORE the file list is consulted: a
+        read whose bounds prune to ZERO files still observed the
+        absence of those rows. An empty ``prune`` records the unbounded
+        scope. ``record_scope=False`` is for rewrites that carry the
+        same rows (compaction), whose scope would only conflict with
+        concurrent in-range inserts."""
+        kb = self._bucket_prune_ids(table, snap, prune)
+        if keep_buckets is not None:
+            kb = keep_buckets if kb is None else (kb & keep_buckets)
+        ppr = self._prune_physical(snap, table, prune)
+        if record_scope:
+            self._record_read_scope(tx, table, ppr or None, kb)
+        return snap.live_files(table, self.store, prune=ppr, keep_buckets=kb)
+
     def scan(
         self,
         table: str,
@@ -2666,22 +2694,7 @@ actions.DropTable` for why clearing the live set on fold is
         schema = self.table_schema(table)
         stored = self._stored_schema(schema)
         snap = self._effective_snapshot(tx)
-        kb = self._bucket_prune_ids(table, snap, prune)
-        if keep_buckets is not None:
-            # caller-supplied exact bucket set (MERGE's source-key cut)
-            # composes with the point-lookup cut by intersection
-            kb = keep_buckets if kb is None else (kb & keep_buckets)
-        ppr = self._prune_physical(snap, table, prune)
-        # scope recorded BEFORE the file list is consulted: a probe
-        # whose bounds prune to ZERO files still observed the absence
-        # of those rows (the r9 judge's merge lost-update repro)
-        self._record_read_scope(tx, table, ppr if prune else None, kb)
-        files = snap.live_files(
-            table,
-            self.store,
-            prune=ppr,
-            keep_buckets=kb,
-        )
+        files = self._plan_files(tx, table, snap, prune, keep_buckets)
         parts = []
         if files:
             parts.append(self._read_live(table, snap, stored, files, record=True))
@@ -3209,15 +3222,11 @@ actions.DropTable` for why clearing the live set on fold is
             )
         else:
             df = df.coalesce(max(1, len(files)))
-        staging = self._staging_dir()
-        # no _to_physical: physical == logical from this commit on
-        self._write_parquet_staging(df, staging)
-        try:
-            self._register_staging(table, tx, staging, rewrite=True)
-        finally:
-            _rmtree(staging)
-        for o in objs:
-            tx.actions.append(RemoveDataObject(name=o.name, table=table, tx_id=tx.id))
+        # no snap: the reset above makes the tx-effective rename map the
+        # identity, so physical == logical from this commit on
+        self._publish_staged(
+            tx, table, df, rewrite=True, replaced=[o.name for o in objs]
+        )
         return len(objs)
 
     def write_manifest(self, table: str, materialize: bool = False) -> list[str]:
@@ -3958,10 +3967,12 @@ actions.DropTable` for why clearing the live set on fold is
 
         1. Tombstone matching *unflushed* rows in the buffer.
         2. Stat-prune candidate files, find truly affected files with a
-           Spark job (``input_file_name`` over matching rows only), then
-           rewrite the affected files' surviving rows in one distributed
-           write (original ``_tx_id``/``_row_idx`` stamps preserved, so
-           multi-version order survives — same trick as writes.go:142-144).
+           Spark job (``_metadata.file_path`` over matching rows only),
+           then rewrite the affected files' surviving rows in one
+           distributed write (original ``_tx_id``/``_row_idx`` stamps
+           preserved, so multi-version order survives — same trick as
+           writes.go:142-144). Small candidate sets take the same
+           rewrite driver-side with pyarrow instead.
         3. Log ``remove`` for each affected file + ``add`` for rewrites.
 
         Affected-file discovery and rewrite both read only stat-pruned
@@ -3981,35 +3992,16 @@ actions.DropTable` for why clearing the live set on fold is
             if value is not None and start <= value <= end:
                 buf[i] = (idx, None)
 
-        # 2. flushed matches — COW rewrite of affected files only
+        # 2. flushed matches — COW rewrite of affected files only. The
+        # delete's read scope is its own range predicate (recorded even
+        # when pruning leaves no candidates: observing absence is still
+        # a read), and read_files covers EVERY candidate on all three
+        # paths (the Spark-free driver path never goes through
+        # _read_live)
         snap = self._effective_snapshot(tx)
-        pr = {column: (start, end)}
-        ppr = self._prune_physical(snap, table, pr)
-        kb = self._bucket_prune_ids(table, snap, pr)
-        # the delete's read scope is its own range predicate — recorded
-        # even when pruning leaves no candidates (observing absence is
-        # still a read), and read_files covers BOTH rewrite paths (the
-        # Spark-free driver path never goes through _read_live)
-        self._record_read_scope(tx, table, ppr, kb)
-        candidates = snap.live_files(
-            table,
-            self.store,
-            prune=ppr,
-            keep_buckets=kb,
-        )
+        candidates = self._plan_files(tx, table, snap, {column: (start, end)})
         tx.read_files.setdefault(table, set()).update(candidates)
         if not candidates:
-            return
-        stored = self._stored_schema(schema)
-        if use_dv:
-            self._delete_rows_dv(
-                tx,
-                table,
-                snap,
-                stored,
-                F.col(column).between(F.lit(start), F.lit(end)),
-                candidates,
-            )
             return
         # Small-transaction fast path: when the stat-pruned candidates
         # hold few rows in total (num_rows is in every add action), the
@@ -4017,53 +4009,45 @@ actions.DropTable` for why clearing the live set on fold is
         # filter + rewrite with zero Spark jobs. A metadata-heavy OLTP-ish
         # loop (the reference's randomized canary) is then bounded by
         # log I/O, not by ~150 ms of Spark scheduling per delete. Bulk
-        # deletes fall through to the distributed path.
-        cand_rows = sum(
-            o.num_rows
-            for o in snap.live_objects(table)
-            if self.store.path_of(o.name) in set(candidates)
-        )
-        # (defaulted predicate columns must take the distributed path:
-        # the driver's raw pyarrow read would miss pre-birth rows whose
-        # NULL logically reads as the default)
-        if (
-            cand_rows <= _DRIVER_DELETE_MAX_ROWS
-            and column not in snap.defaults.get(table, {})
-        ):
-            # pure pyarrow + store API: works with no SparkSession at
-            # all (multiprocess OLTP workers delete through this path)
-            self._delete_rows_driver(tx, table, snap, schema, column, start, end, candidates)
-            return
+        # deletes fall through to the distributed path, and so do
+        # defaulted predicate columns: the driver's raw pyarrow read
+        # would miss pre-birth rows whose NULL logically reads as the
+        # default.
+        if not use_dv and column not in snap.defaults.get(table, {}):
+            cand_set = set(candidates)
+            cand_rows = sum(
+                o.num_rows
+                for o in snap.live_objects(table)
+                if self.store.path_of(o.name) in cand_set
+            )
+            if cand_rows <= _DRIVER_DELETE_MAX_ROWS:
+                # pure pyarrow + store API: works with no SparkSession at
+                # all (multiprocess OLTP workers delete through this path)
+                self._delete_rows_driver(
+                    tx, table, snap, schema, column, start, end, candidates
+                )
+                return
         # the Column is built only on the Spark paths — constructing it
         # above would pin even driver-side deletes to a live session
+        stored = self._stored_schema(schema)
         pred = F.col(column).between(F.lit(start), F.lit(end))
-        cand_df = self._read_live(table, snap, stored, candidates, with_pos=True)
-        affected_names = {
-            r[0] for r in cand_df.filter(pred).select("__obj").distinct().collect()
-        }
-        if not affected_names:
+        if use_dv:
+            self._write_dv(
+                tx,
+                table,
+                self._read_live(table, snap, stored, candidates, with_pos=True).filter(pred),
+            )
             return
-        # DV-aware read of the affected files so the rewrite both drops
-        # the matched rows AND materializes any prior soft deletes
-        # (removing the object retires its vectors — no resurrection).
-        survivors = self._read_live(
+        self._rewrite_affected(
+            tx,
             table,
             snap,
             stored,
-            [self.store.path_of(n) for n in sorted(affected_names)],
-            record=True,
-        ).filter(~pred | F.col(column).isNull())
-        staging = self._staging_dir()
-        self._write_parquet_staging(
-            self._to_physical(tx, table, self._bucketize(tx, table, survivors), snap),
-            staging,
+            candidates,
+            pred,
+            lambda rows: rows.filter(~pred | F.col(column).isNull()),
+            rewrite=True,
         )
-        try:
-            self._register_staging(table, tx, staging, rewrite=True)
-        finally:
-            _rmtree(staging)
-        for name in sorted(affected_names):
-            tx.actions.append(RemoveDataObject(name=name, table=table, tx_id=tx.id))
 
     def merge(
         self,
@@ -4156,85 +4140,52 @@ actions.DropTable` for why clearing the live set on fold is
             if any_keys
             else None
         )
-        if any_keys and pr:
-            # Driver-side probe (r17, guide §6): when stats + bucket
-            # pruning leave ZERO live files — a CDC burst of entirely
-            # NEW keys — no row can match, so the probe scan, the
-            # matched write and the anti-join are all empty-input
-            # Spark jobs (~1 s of fixed cost at trickle scale). Skip
-            # them: record the read SCOPE exactly as the scan would
-            # (the r9 lost-update contract — conflicts come from
-            # scopes, not read files; the composed bucket cut below is
-            # scan()'s own) and append the whole source. The buffer
-            # was flushed above, so the snapshot's live set is the
-            # entire matchable state.
-            kb_probe = self._bucket_prune_ids(table, snap0, pr)
-            if kb is not None:
-                kb_probe = kb if kb_probe is None else (kb_probe & kb)
-            ppr0 = self._prune_physical(snap0, table, pr)
-            if not snap0.live_files(
-                table, self.store, prune=ppr0, keep_buckets=kb_probe
-            ) and not tx.buffers.get(table):
-                self._record_read_scope(tx, table, ppr0, kb_probe)
-                try:
-                    out = {"updated": 0, "deleted": 0, "inserted": 0}
-                    if when_not_matched == "insert":
-                        out["inserted"] = self._write_counted(table, src)
-                    return out
-                finally:
-                    src.unpersist()
-        if any_keys:
+        # ONE plan for the whole merge: the matched-key read and the
+        # delete lane's DV read both take this file list, and the read
+        # scope is recorded here even when it prunes to zero files
+        files = self._plan_files(tx, table, snap0, pr, kb) if any_keys else []
+        try:
+            out = {"updated": 0, "deleted": 0, "inserted": 0}
+            if not files:
+                # no live file can hold a match (a CDC burst of entirely
+                # NEW keys, an empty or all-NULL-key source — NULL never
+                # equals anything): skip the probe read, the matched
+                # write and the anti-join, all empty-input Spark jobs
+                # (~1 s of fixed cost at trickle scale), and append the
+                # whole source. The buffer was flushed above, so the
+                # snapshot's live set is the entire matchable state.
+                if when_not_matched == "insert":
+                    out["inserted"] = self._write_counted(table, src)
+                return out
+            stored = self._stored_schema(self.table_schema(table))
+            base = self._read_live(
+                table,
+                snap0,
+                stored,
+                files,
+                with_pos=when_matched == "delete",
+                record=True,
+            )
             matched_keys = (
-                self.scan(table, prune=pr, with_stamps=False, keep_buckets=kb)
-                .select(*keys)
+                base.select(*keys)
                 .join(src.select(*keys).distinct(), list(keys), "left_semi")
                 .distinct()
                 .persist()
             )
-        else:
-            # empty source / all-NULL keys: NULL never equals anything,
-            # so nothing matches and the table is not read at all
-            key_schema = T.StructType(
-                [f for f in self.table_schema(table).fields if f.name in keys]
-            )
-            matched_keys = self.spark.createDataFrame([], key_schema).persist()
-        try:
-            matched = src.join(matched_keys, list(keys), "left_semi")
-            unmatched = src.join(matched_keys, list(keys), "left_anti")
-            out = {"updated": 0, "deleted": 0, "inserted": 0}
-            if when_matched == "update":
-                out["updated"] = self._write_counted(table, matched)
-            elif when_matched == "delete":
-                stored = self._stored_schema(self.table_schema(table))
-                files = (
-                    snap0.live_files(
-                        table,
-                        self.store,
-                        prune=self._prune_physical(snap0, table, pr),
-                        keep_buckets=kb
-                        if kb is not None
-                        else self._bucket_prune_ids(table, snap0, pr),
-                    )
-                    if any_keys
-                    else []
-                )
-                if files:
-                    base = self._read_live(
-                        table, snap0, stored, files, with_pos=True, record=True
-                    )
+            try:
+                if when_matched == "update":
+                    matched = src.join(matched_keys, list(keys), "left_semi")
+                    out["updated"] = self._write_counted(table, matched)
+                elif when_matched == "delete":
                     hits = base.join(matched_keys, list(keys), "left_semi")
-                    out["deleted"] = self._write_dv(
-                        tx,
-                        table,
-                        hits.select(
-                            F.col("__obj").alias("obj"), F.col("__ridx").alias("row_idx")
-                        ),
-                    )
-            if when_not_matched == "insert":
-                out["inserted"] = self._write_counted(table, unmatched)
-            return out
+                    out["deleted"] = self._write_dv(tx, table, hits)
+                if when_not_matched == "insert":
+                    unmatched = src.join(matched_keys, list(keys), "left_anti")
+                    out["inserted"] = self._write_counted(table, unmatched)
+                return out
+            finally:
+                matched_keys.unpersist()
         finally:
-            matched_keys.unpersist()
             src.unpersist()
 
     def update_rows(
@@ -4329,111 +4280,109 @@ actions.DropTable` for why clearing the live set on fold is
                         new_row[pos[gcol]] = None
                 buf[i] = (idx, new_row)
 
-        pr = {column: (start, end)}
-        ppr = self._prune_physical(snap, table, pr)
-        kb = self._bucket_prune_ids(table, snap, pr)
         # same read-scope contract as delete_rows: the update's range
-        # predicate is what this tx's outcome depended on
-        self._record_read_scope(tx, table, ppr, kb)
-        candidates = snap.live_files(
-            table,
-            self.store,
-            prune=ppr,
-            keep_buckets=kb,
-        )
+        # predicate is what this tx's outcome depended on (read_files
+        # gets only the affected files, via the DV-aware rewrite read)
+        candidates = self._plan_files(tx, table, snap, {column: (start, end)})
         if not candidates:
             return
-        stored = self._stored_schema(schema)
         pred = F.col(column).between(F.lit(start), F.lit(end))
-        cand_df = self._read_live(table, snap, stored, candidates, with_pos=True)
-        affected_names = {
-            r[0] for r in cand_df.filter(pred).select("__obj").distinct().collect()
-        }
-        if not affected_names:
-            return
-        base = self._read_live(
+
+        def _set(rows: DataFrame) -> DataFrame:
+            # the match mask is MATERIALIZED against the pre-SET frame:
+            # the generated-column recompute below runs on top of the
+            # updated frame, where re-evaluating `pred` would see the
+            # post-SET value of the predicate column — a SET that moves
+            # it out of [start, end] would then skip the recompute and
+            # crash on the implicit CHECK
+            updated = rows.withColumn("__upd", pred).withColumns(
+                {
+                    cname: F.when(F.col("__upd"), v if isinstance(v, Column) else F.lit(v))
+                    .otherwise(F.col(cname))
+                    .cast(schema[cname].dataType)
+                    for cname, v in set_values.items()
+                }
+            )
+            # GENERATED columns RECOMPUTE on the updated rows (Delta's
+            # UPDATE semantics: a SET on a source column refreshes the
+            # generated value); explicitly-SET generated columns are
+            # left to the implicit CHECK to arbitrate
+            for gcol, gexpr in gen_cols.items():
+                if gcol in set_values:
+                    continue
+                updated = updated.withColumn(
+                    gcol,
+                    F.when(F.col("__upd"), F.expr(gexpr))
+                    .otherwise(F.col(gcol))
+                    .cast(schema[gcol].dataType),
+                )
+            return updated.drop("__upd")
+
+        # NOT rewrite-tagged: UPDATE modifies values, so its output can
+        # move rows INTO a concurrent reader's recorded scope (SET k=50
+        # vs a reader that observed "no rows in [40,60]") — a rw
+        # exemption here would re-admit the write-skew class this lane
+        # exists to catch. Delta treats UPDATE AddFiles as
+        # dataChange=true conflict candidates for the same reason;
+        # updates whose output stats are disjoint from every recorded
+        # scope still admit through the stats test.
+        self._rewrite_affected(
+            tx,
             table,
             snap,
-            stored,
-            [self.store.path_of(n) for n in sorted(affected_names)],
-            record=True,
+            self._stored_schema(schema),
+            candidates,
+            pred,
+            _set,
+            rewrite=False,
         )
-        # the match mask is MATERIALIZED against the pre-SET frame: the
-        # generated-column recompute below runs on top of the updated
-        # frame, where re-evaluating `pred` would see the post-SET
-        # value of the predicate column — a SET that moves it out of
-        # [start, end] would then skip the recompute and crash on the
-        # implicit CHECK (review catch, r10)
-        updated = base.withColumn("__upd", pred).withColumns(
-            {
-                cname: F.when(F.col("__upd"), v if isinstance(v, Column) else F.lit(v))
-                .otherwise(F.col(cname))
-                .cast(schema[cname].dataType)
-                for cname, v in set_values.items()
-            }
-        )
-        # GENERATED columns RECOMPUTE on the updated rows (Delta's
-        # UPDATE semantics: a SET on a source column refreshes the
-        # generated value); explicitly-SET generated columns are left
-        # to the implicit CHECK to arbitrate
-        for gcol, gexpr in snap.generated.get(table, {}).items():
-            if gcol in set_values:
-                continue
-            updated = updated.withColumn(
-                gcol,
-                F.when(F.col("__upd"), F.expr(gexpr))
-                .otherwise(F.col(gcol))
-                .cast(schema[gcol].dataType),
-            )
-        updated = updated.drop("__upd")
-        staging = self._staging_dir()
-        self._write_parquet_staging(
-            self._to_physical(tx, table, self._bucketize(tx, table, updated), snap),
-            staging,
-        )
-        try:
-            # NOT rewrite-tagged (review catch, r10): UPDATE modifies
-            # values, so its output can move rows INTO a concurrent
-            # reader's recorded scope (SET k=50 vs a reader that
-            # observed "no rows in [40,60]") — a rw exemption here
-            # would re-admit the write-skew class this lane exists to
-            # catch. Delta treats UPDATE AddFiles as dataChange=true
-            # conflict candidates for the same reason; updates whose
-            # output stats are disjoint from every recorded scope
-            # still admit through the stats test.
-            self._register_staging(table, tx, staging)
-        finally:
-            _rmtree(staging)
-        for name in sorted(affected_names):
-            tx.actions.append(RemoveDataObject(name=name, table=table, tx_id=tx.id))
 
-    def _delete_rows_dv(
+    def _rewrite_affected(
         self,
         tx: "_Tx",
         table: str,
         snap: Snapshot,
         stored: T.StructType,
-        pred,
         candidates: list[str],
+        pred: Column,
+        transform: Callable[[DataFrame], DataFrame],
+        rewrite: bool,
     ) -> None:
-        """Soft delete: record matching (obj, row_idx) positions as a
-        deletion-vector object instead of rewriting data files. O(mask)
-        written instead of O(affected files) — the right trade for
-        small/selective deletes over huge objects; compaction or a
-        later COW delete materializes the mask."""
-        matches = (
-            self._read_live(table, snap, stored, candidates, with_pos=True)
-            .filter(pred)
-            .select(F.col("__obj").alias("obj"), F.col("__ridx").alias("row_idx"))
+        """The distributed copy-on-write step DELETE and UPDATE share:
+        one small collect finds the candidates holding a row that
+        matches ``pred``; exactly those are read DV-aware (recorded in
+        the tx read set) so the rewrite also materializes any prior
+        soft deletes — removing the objects retires their vectors, no
+        resurrection — and the verb's ``transform`` of that frame is
+        published in their place. Rewritten rows keep their
+        ``_tx_id``/``_row_idx`` stamps, so multi-version order
+        survives."""
+        hits = self._read_live(table, snap, stored, candidates, with_pos=True).filter(pred)
+        affected = sorted({r[0] for r in hits.select("__obj").distinct().collect()})
+        if not affected:
+            return
+        rows = self._read_live(
+            table, snap, stored, [self.store.path_of(n) for n in affected], record=True
         )
-        self._write_dv(tx, table, matches)
+        self._publish_staged(
+            tx,
+            table,
+            self._bucketize(tx, table, transform(rows)),
+            snap,
+            rewrite=rewrite,
+            replaced=affected,
+        )
 
-    def _write_dv(self, tx: "_Tx", table: str, matches: DataFrame) -> int:
-        """Publish an (obj, row_idx) mask DataFrame as a deletion-vector
-        object + log action. Returns rows masked (0 = no-op)."""
-        staging = self._staging_dir()
-        try:
-            self._write_parquet_staging(matches.coalesce(1), staging)
+    def _write_dv(self, tx: "_Tx", table: str, positions: DataFrame) -> int:
+        """Soft delete: publish the ``__obj``/``__ridx`` positions of a
+        ``with_pos`` read as one deletion-vector object + log action
+        instead of rewriting data files — O(mask) written instead of
+        O(affected files); scans apply the mask, compaction or a later
+        COW rewrite materializes it. Returns rows masked (0 = no-op)."""
+        mask = positions.select(
+            F.col("__obj").alias("obj"), F.col("__ridx").alias("row_idx")
+        ).coalesce(1)
+        with self._staging_dir(mask) as staging:
             part = next(
                 (f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")), None
             )
@@ -4458,8 +4407,6 @@ actions.DropTable` for why clearing the live set on fold is
                 )
             )
             return dv_tbl.num_rows
-        finally:
-            _rmtree(staging)
 
     def _arrow_bound(self, pa_type, bound: Any) -> Any:
         """Align a Python datetime bound with an Arrow column's timestamp
@@ -4523,8 +4470,7 @@ actions.DropTable` for why clearing the live set on fold is
                 dv_cache[obj_name] = masked
             return dv_cache[obj_name]
 
-        staging = self._staging_dir()
-        try:
+        with self._staging_dir() as staging:
             for i, path in enumerate(candidates):
                 tbl = self._read_store_parquet(_basename_of_uri(path))
                 obj_name = _basename_of_uri(path)
@@ -4560,8 +4506,6 @@ actions.DropTable` for why clearing the live set on fold is
                         name=_basename_of_uri(path), table=table, tx_id=tx.id
                     )
                 )
-        finally:
-            _rmtree(staging)
 
     # ------------------------------------------------------------------
     # maintenance
@@ -4627,14 +4571,10 @@ actions.DropTable` for why clearing the live set on fold is
         if where is not None:
             w_col, w_lo, w_hi = where
             w_lo, w_hi = self._check_range_types(schema, w_col, w_lo, w_hi)
-            pr = {w_col: (w_lo, w_hi)}
             keep_names = {
                 _basename_of_uri(p)
-                for p in snap.live_files(
-                    table,
-                    self.store,
-                    prune=self._prune_physical(snap, table, pr),
-                    keep_buckets=self._bucket_prune_ids(table, snap, pr),
+                for p in self._plan_files(
+                    tx, table, snap, {w_col: (w_lo, w_hi)}, record_scope=False
                 )
             }
             objs = [o for o in objs if o.name in keep_names]
@@ -4716,14 +4656,9 @@ actions.DropTable` for why clearing the live set on fold is
             df = self._bucketize(tx, table, df)
         else:
             df = df.coalesce(target_files)
-        staging = self._staging_dir()
-        self._write_parquet_staging(self._to_physical(tx, table, df, snap), staging)
-        try:
-            self._register_staging(table, tx, staging, rewrite=True)
-        finally:
-            _rmtree(staging)
-        for o in objs:
-            tx.actions.append(RemoveDataObject(name=o.name, table=table, tx_id=tx.id))
+        self._publish_staged(
+            tx, table, df, snap, rewrite=True, replaced=[o.name for o in objs]
+        )
 
     # ------------------------------------------------------------------
     # internals
@@ -4923,17 +4858,14 @@ actions.DropTable` for why clearing the live set on fold is
         survivors = self._read_live(
             table, snap, stored, [self.store.path_of(n) for n in heavy]
         )
-        staging = self._staging_dir()
-        self._write_parquet_staging(
-            self._to_physical(tx, table, self._bucketize(tx, table, survivors), snap),
-            staging,
+        self._publish_staged(
+            tx,
+            table,
+            self._bucketize(tx, table, survivors),
+            snap,
+            rewrite=True,
+            replaced=heavy,
         )
-        try:
-            self._register_staging(table, tx, staging, rewrite=True)
-        finally:
-            _rmtree(staging)
-        for name in heavy:
-            tx.actions.append(RemoveDataObject(name=name, table=table, tx_id=tx.id))
         return len(heavy)
 
     def vacuum(
@@ -5737,15 +5669,7 @@ actions.DropTable` for why clearing the live set on fold is
                         F.expr(gexpr).cast(stored[gcol].dataType),
                     ),
                 )
-            staging = self._staging_dir()
-            self._write_parquet_staging(
-                self._to_physical(tx, table, self._bucketize(tx, table, stamped), snap),
-                staging,
-            )
-            try:
-                self._register_staging(table, tx, staging)
-            finally:
-                _rmtree(staging)
+            self._publish_staged(tx, table, self._bucketize(tx, table, stamped), snap)
             return
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -5767,12 +5691,10 @@ actions.DropTable` for why clearing the live set on fold is
             {name: pa.array(vals, type=arrow_schema.field(name).type) for name, vals in cols.items()},
             schema=arrow_schema,
         )
-        tmp = os.path.join(self._staging_dir(), "obj.parquet")
-        pq.write_table(batch, tmp)
-        try:
+        with self._staging_dir() as staging:
+            tmp = os.path.join(staging, "obj.parquet")
+            pq.write_table(batch, tmp)
             self._register_object(table, tx, tmp)
-        finally:
-            _rmtree(os.path.dirname(tmp))
 
     def _identity_spec(self, tx: "_Tx", table: str) -> dict[str, dict]:
         """The table's IDENTITY declarations as visible to this tx
@@ -6168,18 +6090,20 @@ actions.DropTable` for why clearing the live set on fold is
         same function the catalog bucketed-table reader assumes of
         files labeled ``_NNNNN``, so partition i of this write IS
         bucket i. (AQE never coalesces an explicit-count repartition,
-        so the index→bucket mapping is stable.) Every engine rewrite
-        path (bulk ingest, COW delete/update, DV materialization,
-        compaction) funnels its staged frame through here, which is
+        so the index→bucket mapping is stable.) Callers of
+        _publish_staged apply it to the frames they stage, which is
         what keeps the layout true across the table's whole lifecycle;
-        the correctness pytest joins the bucketed scan against a plain
+        the driver-side pyarrow rewrite instead carries the source
+        object's label (a row subset stays in its bucket). The
+        correctness pytest joins the bucketed scan against a plain
         scan to catch any divergence in the hash contract itself.
 
-        The same funnel property makes this the CHECK-constraint
-        enforcement point: every staged frame passes the table's
-        declared checks in-plan (a codegen'd ``when`` wrap on the
-        first column — no extra pass), so no file written while a
-        constraint is active can violate it, on ANY write path."""
+        This is also the CHECK-constraint enforcement point: a staged
+        frame passes the table's declared checks in-plan (a codegen'd
+        ``when`` wrap on the first column — no extra pass), so no file
+        written while a constraint is active can violate it.
+        Clustered ingest, which skips the bucket layout, calls
+        _enforce_checks directly."""
         df = self._enforce_checks(tx, table, df)
         spec = self._bucket_spec(tx, table)
         if spec is None:
@@ -6362,9 +6286,11 @@ actions.DropTable` for why clearing the live set on fold is
 
         Reads ONLY the declared columns from the (local staging) file —
         the same driver-side footer pass that already produces min/max
-        stats, extended by one column read. Registration paths all
-        funnel here, so flush, bulk ingest, COW rewrites and compaction
-        keep blooms consistent automatically."""
+        stats, extended by one column read. It serves the driver-side
+        writes (buffer flush, small COW delete); a bloomed table's
+        Spark-written files, all staged through _publish_staged, get
+        theirs from _staged_stats_distributed's one pass instead — so
+        blooms stay consistent on every write path."""
         snap = self._effective_snapshot(tx)
         cols = snap.bloom_cols.get(table)
         if not cols:
@@ -6403,11 +6329,44 @@ actions.DropTable` for why clearing the live set on fold is
             a.num_rows for a in tx.actions[before:] if isinstance(a, AddDataObject)
         )
 
-    def _staging_dir(self) -> str:
+    @contextlib.contextmanager
+    def _staging_dir(self, df: Optional[DataFrame] = None) -> Iterator[str]:
+        """A fresh staging directory (under the store root, so publishing
+        is a hard link), holding ``df`` written as Parquet when one is
+        given. Removed on exit — also when the write itself fails
+        in-plan (a CHECK violation), which would otherwise leave a
+        ``.tmp/staging_*`` directory no vacuum reclaims."""
         root = getattr(self.store, "root", None) or os.path.join("/tmp", "dles_staging")
         d = os.path.join(root, ".tmp", f"staging_{uuid.uuid4().hex}")
         os.makedirs(d, exist_ok=True)
-        return d
+        try:
+            if df is not None:
+                self._write_parquet_staging(df, d)
+            yield d
+        finally:
+            _rmtree(d)
+
+    def _publish_staged(
+        self,
+        tx: _Tx,
+        table: str,
+        df: DataFrame,
+        snap: Optional[Snapshot] = None,
+        rewrite: bool = False,
+        replaced: Iterable[str] = (),
+    ) -> Optional[int]:
+        """The one publish step for Spark-written data: stage ``df``
+        (logical names; renamed to physical here, from ``snap`` or the
+        tx-effective snapshot), register every staged file as an
+        ``add`` (``rewrite`` tags them as carrying existing rows — see
+        _register_staging), and log a ``remove`` for each ``replaced``
+        object, all in this tx. The caller owns the layout (bucketize,
+        cluster, coalesce). Returns the max ``_row_idx`` staged."""
+        with self._staging_dir(self._to_physical(tx, table, df, snap)) as staging:
+            max_idx = self._register_staging(table, tx, staging, rewrite=rewrite)
+        for name in replaced:
+            tx.actions.append(RemoveDataObject(name=name, table=table, tx_id=tx.id))
+        return max_idx
 
     def _maybe_checkpoint(self, tx: _Tx) -> None:
         if self.checkpoint_interval <= 0 or tx.id % self.checkpoint_interval != 0:

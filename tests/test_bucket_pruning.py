@@ -184,10 +184,19 @@ def test_point_lookup_prunes_to_one_bucket(spark, store_dir):
     c.abort_tx()
 
 
-def test_point_delete_uses_bucket_pruning_and_stays_correct(spark, store_dir):
+def test_point_delete_uses_bucket_pruning_and_stays_correct(
+    spark, store_dir, monkeypatch
+):
     """delete_rows with a point range on the bucket column composes the
     bucket cut with the COW rewrite: only the key's rows disappear,
-    everything else survives — across buckets and after replay."""
+    everything else survives — across buckets and after replay. The
+    driver-side pyarrow rewrite and the distributed Spark rewrite
+    (forced by a zero row threshold) agree on the result, the recorded
+    read set (the range scope + EVERY stats/bucket candidate) and the
+    objects they remove."""
+    import delta_lake_experiment_spark.client as client_mod
+    from delta_lake_experiment_spark.plans.actions import RemoveDataObject
+
     c = DeltaLakeClient(spark, store_dir, dataobject_size=25)
     c.new_tx()
     c.create_table("t", "k bigint, v string", bucket_by=(["k"], 8))
@@ -195,9 +204,45 @@ def test_point_delete_uses_bucket_pruning_and_stays_correct(spark, store_dir):
     c.write_dataframe(
         "t", spark.createDataFrame(rows, "k long, v string").repartition(4)
     )
+    # a second file in key 7's bucket whose [min, max] admits 7 but
+    # holds no 7: a candidate both paths must read but not rewrite
+    bid = bucket_id_for([7], ["bigint"], 8)
+    lo = max(k for k in range(-100, 7) if bucket_id_for([k], ["bigint"], 8) == bid)
+    hi = min(k for k in range(8, 100) if bucket_id_for([k], ["bigint"], 8) == bid)
+    bracket = [(lo, "lo"), (hi, "hi")]
+    c.write_dataframe("t", spark.createDataFrame(bracket, "k long, v string"))
+    rows += bracket
     c.commit_tx()
-    c.new_tx()
-    c.delete_rows("t", "k", 7, 7)
+    seen = []
+    for max_rows in (client_mod._DRIVER_DELETE_MAX_ROWS, 0):
+        monkeypatch.setattr(client_mod, "_DRIVER_DELETE_MAX_ROWS", max_rows)
+        c.new_tx()
+        snap = c._effective_snapshot(c.tx)
+        candidates = snap.live_files(
+            "t", c.store, prune={"k": (7, 7)}, keep_buckets={bid}
+        )
+        holding_7 = {
+            n.rsplit("/", 1)[-1]
+            for n in candidates
+            if 7 in c._read_store_parquet(n.rsplit("/", 1)[-1])["k"].to_pylist()
+        }
+        assert len(candidates) == 2 and len(holding_7) == 1
+        c.delete_rows("t", "k", 7, 7)
+        assert c.tx.read_scopes == {
+            "t": [{"bounds": {"k": (7, 7)}, "buckets": {bid}}]
+        }
+        assert c.tx.read_files == {"t": set(candidates)}
+        removed = {
+            a.name for a in c.tx.actions if isinstance(a, RemoveDataObject)
+        }
+        assert removed == holding_7
+        got = sorted(
+            (r["k"], r["v"]) for r in c.scan("t", with_stamps=False).collect()
+        )
+        seen.append((got, removed))
+        if max_rows:
+            c.abort_tx()  # the distributed run deletes the same rows
+    assert seen[0] == seen[1]
     c.commit_tx()
     c2 = DeltaLakeClient(spark, store_dir)
     c2.new_tx()

@@ -308,12 +308,17 @@ def test_timestamp_as_of_and_history(spark, store_dir):
     assert dh.collect()[0]["version"] == 2
 
 
-def test_merge_prunes_table_files_by_source_key_bounds(spark, store_dir):
+def test_merge_prunes_table_files_by_source_key_bounds(
+    spark, store_dir, monkeypatch
+):
     """A MERGE's table-side reads are pruned by the SOURCE's key
     bounds through the log-level stats: a range-local source touches
     O(matching files), a delete-merge's DV names only candidate
-    files, and results are identical to the unpruned semantics."""
+    files, and results are identical to the unpruned semantics. Each
+    merge plans its file list ONCE (one ``Snapshot.live_files``) and
+    reuses it for the probe, the matched-key read and the DV lane."""
     from delta_lake_experiment_spark.plans.actions import AddDeletionVector
+    from delta_lake_experiment_spark.plans.snapshot import Snapshot
 
     c = DeltaLakeClient(spark, store_dir, dataobject_size=10)
     c.new_tx()
@@ -336,6 +341,14 @@ def test_merge_prunes_table_files_by_source_key_bounds(spark, store_dir):
     candidates = {
         n.rsplit("/", 1)[-1] for n in snap.live_files("kv", c.store, prune=pr)
     }
+    plans = []
+    live_files = Snapshot.live_files
+
+    def _counted(self, *a, **kw):
+        plans.append(a[0])
+        return live_files(self, *a, **kw)
+
+    monkeypatch.setattr(Snapshot, "live_files", _counted)
     out = c.merge(
         "kv",
         spark.createDataFrame([(12, "X"), (14, "Y"), (99, "Z")], "k BIGINT, v STRING"),
@@ -343,6 +356,7 @@ def test_merge_prunes_table_files_by_source_key_bounds(spark, store_dir):
         when_not_matched="insert",
     )
     assert out == {"updated": 0, "deleted": 2, "inserted": 1}
+    assert plans == ["kv"]
     dvs = [a for a in c.tx.actions if isinstance(a, AddDeletionVector)]
     assert dvs and set(dvs[0].objects) <= candidates
     c.commit_tx()
@@ -351,11 +365,13 @@ def test_merge_prunes_table_files_by_source_key_bounds(spark, store_dir):
     assert 12 not in cur and 14 not in cur and cur[99] == "Z"
     assert cur[13] == "v13" and len(cur) == 39
     # update-merge through the pruned matched-keys probe
+    plans.clear()
     out = c.merge(
         "kv",
         spark.createDataFrame([(13, "UPD"), (100, "NEW")], "k BIGINT, v STRING"),
     )
     assert out == {"updated": 1, "deleted": 0, "inserted": 1}
+    assert plans == ["kv"]
     c.commit_tx()
     c.new_tx()
     cur = {r["k"]: r["v"] for r in c.scan_current("kv").collect()}
@@ -485,6 +501,9 @@ def test_selective_compaction_rewrites_only_matching_files(spark, store_dir):
     }
     assert cold  # the 0-9 file
     c.compact("t", where=("k", 10, 19))
+    # no read set: the rewrite-tagged adds carry the same rows, so a
+    # recorded range would only conflict with concurrent in-range inserts
+    assert c.tx.read_scopes == {} and c.tx.read_files == {}
     c.commit_tx()
 
     c.new_tx()

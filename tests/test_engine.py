@@ -3,6 +3,8 @@ suite (reference main_test.go, 4 tests; see SURVEY.md §5) plus unit tests
 for the storage/log/stat layers the reference doesn't cover.
 """
 
+import glob
+import os
 import random
 
 import pytest
@@ -825,11 +827,26 @@ def test_update_rows(spark, store_dir):
     assert got[0] == "v0" and got[5] == "v5"
     c.commit_tx()
 
-    # Column-expression SET + stamp preservation (time travel unaffected)
+    # read set: the range is the scope, but only AFFECTED files join
+    # read_files — a stats candidate without a matching row does not
     c.new_tx()
+    c.update_rows("t", "amt", 2.5, 2.7, {"v": "none"})
+    assert c.tx.read_scopes == {
+        "t": [{"bounds": {"amt": (2.5, 2.7)}, "buckets": None}]
+    }
+    assert c.tx.read_files == {}
+    holding_0_1 = {
+        c.store.path_of(o.name)
+        for o in c._effective_snapshot(c.tx).live_objects("t")
+        if o.stats["k"][0] <= 1
+    }
+    assert len(holding_0_1) == 1
+
+    # Column-expression SET + stamp preservation (time travel unaffected)
     from pyspark.sql import functions as SF
 
     c.update_rows("t", "k", 0, 1, {"amt": SF.col("amt") + 100.0})
+    assert c.tx.read_files == {"t": holding_0_1}
     amts = {r["k"]: r["amt"] for r in c.scan("t", with_stamps=False).collect()}
     assert amts[0] == 100.0 and amts[1] == 101.0 and amts[2] == 2.0
     c.commit_tx()
@@ -2035,6 +2052,8 @@ def test_check_constraints_enforced_on_every_write_path(spark, store_dir):
     with pytest.raises(Exception, match="score_range"):
         c.update_rows("t", "k", 1, 1, {"score": 7.0})
     c.abort_tx()
+    # no failed write above left its staging directory behind
+    assert not glob.glob(os.path.join(store_dir, ".tmp", "staging_*"))
     # a valid update still goes through
     c.new_tx()
     c.update_rows("t", "k", 1, 1, {"score": 0.9})

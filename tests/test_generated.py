@@ -3,6 +3,7 @@ computed when the writer omits them, validated by the implicit CHECK
 when supplied, recomputed on UPDATE, materialized so stats pruning on
 the generated column prunes files like any stored column."""
 
+import glob
 import os
 import sys
 
@@ -61,6 +62,8 @@ def test_supplied_wrong_value_raises(spark, tmp_path):
     )
     with pytest.raises(Exception, match="bucket3_generated|CHECK|check"):
         c.write_dataframe("t", bad)
+    # the failed staged write leaves no staging debris behind
+    assert not glob.glob(os.path.join(str(tmp_path), ".tmp", "staging_*"))
     c.abort_tx()
 
 
@@ -76,6 +79,7 @@ def test_buffered_rows_none_computes_and_wrong_raises(spark, tmp_path):
     c.write_row("t", [9, 1.0, 1])  # wrong: 9 % 3 == 0
     with pytest.raises(Exception, match="bucket3_generated|CHECK|check"):
         c.flush_buffer("t")
+    assert not glob.glob(os.path.join(str(tmp_path), ".tmp", "staging_*"))
     c.abort_tx()
 
 
