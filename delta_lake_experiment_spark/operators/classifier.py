@@ -14,14 +14,13 @@ pattern (same as BPE training and IVF centroid refinement here):
   one of ``dim`` buckets, keep the DISTINCT bucket set per doc (binary
   bag-of-words; presence, not counts — bounded per-doc work and the
   standard hashing-trick classifier input).
-- **Each training iteration** is ONE distributed job: score every doc
-  against the current weights (weights enter the plan as a LITERAL
-  array — no join; ``dim`` is small by construction), emit
-  ``(bucket, residual)`` per doc-feature, partial-aggregate to at most
-  ``dim + 1`` gradient rows (map-side combine absorbs the corpus), and
-  collect those O(dim) rows to the driver. Full-batch gradient
-  descent: deterministic given the corpus — no sampling, no
-  per-partition RNG.
+- **Each training iteration** is ONE distributed job: one Arrow scan
+  scores every doc against the current weights (weights ride in the
+  closure — no join, and the plan is identical across iterations;
+  ``dim`` is small by construction) and emits one partial gradient of
+  ``dim + 1`` numbers per batch; the O(batches) partials are collected
+  and ``fsum``-combined on the driver. Full-batch gradient descent:
+  deterministic given the corpus — no sampling, no per-partition RNG.
 - **The weight update runs on the driver** over O(dim) floats, and
   weights are ROUNDED to ``round_digits`` each iteration: distributed
   double addition is order-sensitive at ~1e-16, and rounding to a grid
@@ -93,7 +92,7 @@ def _margin(weights: Sequence[float], bias: float) -> Column:
     generated source across GD iterations; ConstantFolding folds
     ``literal_array[literal_idx]`` straight back to inlined scalars,
     so training avoids per-iteration recompiles via the Arrow gradient
-    strategy instead, and this scoring-side expression compiles
+    pass instead, and this scoring-side expression compiles
     once per model either way.)"""
     expr: Column = F.lit(float(bias))
     for f, w in enumerate(weights):
@@ -115,24 +114,22 @@ def train_hashed_logreg(
     lr: float = 0.5,
     round_digits: int = 9,
     feature_sets: "DataFrame | None" = None,
-    grad_strategy: str = "arrow",
 ) -> "tuple[list[float], float]":
     """Full-batch gradient-descent logistic regression on hashed binary
     features; returns ``(weights, bias)`` — ``weights[f]`` for buckets
     ``0..dim-1``, plus the intercept.
 
-    ``grad_strategy`` picks the per-iteration job's form, exactly as
-    in :func:`train_hashed_softmax`: ``"arrow"`` (default since the
-    r16 optimization round) computes per-batch numpy partial gradients
-    in one mapInPandas scan, fsum-combined on the driver — the plan is
-    identical across iterations, so Catalyst analysis + codegen run
-    once instead of once PER ITERATION (the flat conditional
+    Each iteration is ONE job, as in :func:`train_hashed_softmax`:
+    :func:`_logreg_grad_arrow` computes per-batch numpy partial
+    gradients in one mapInPandas scan, fsum-combined on the driver —
+    the plan is identical across iterations, so Catalyst analysis +
+    codegen run once instead of once PER ITERATION (a flat conditional
     aggregation re-inlines each iteration's weights as literals;
     measured ~1–2 s of planning/compile per step at sf0.1,
-    data-size-independent); ``"agg"`` keeps the flat (dim+1)-column
-    conditional aggregation (fully JVM). Both are full-batch and land
-    on the same rounded trajectory (pytest-pinned on the fixture; the
-    module's 1e-9-grid reassociation argument).
+    data-size-independent). The pure-Python and DuckDB
+    (:func:`hashed_logreg_sql`) references land on the same rounded
+    trajectory (pytest-pinned; the module's 1e-9-grid reassociation
+    argument).
 
     ``label_col`` must be 0/1 (weak labels — e.g. a heuristic quality
     gate); NULL labels raise (a silently-dropped row would make the
@@ -151,8 +148,6 @@ def train_hashed_logreg(
     """
     if iters < 1:
         raise ValueError(f"iters={iters!r} must be >= 1")
-    if grad_strategy not in ("arrow", "agg"):
-        raise ValueError(f"unknown grad_strategy {grad_strategy!r}")
     fsets = (
         feature_sets
         if feature_sets is not None
@@ -182,53 +177,12 @@ def train_hashed_logreg(
     bias = 0.0
     try:
         for _ in range(iters):
-            if grad_strategy == "arrow":
-                gb, g = _logreg_grad_arrow(feats, w, bias, n, dim)
-                bias = round(bias - lr * gb, round_digits)
-                for f in range(dim):
-                    # an untouched bucket has an exact-zero gradient:
-                    # w - lr*0 == w, already on the grid
-                    w[f] = round(w[f] - lr * g[f], round_digits)
-                continue
-            p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_margin(w, bias)))
-            # one flat 65-column conditional aggregation instead of an
-            # explode + groupBy: g_f = SUM(residual where doc contains
-            # bucket f), g_bias = SUM(residual). The explode shape
-            # shuffled ~|docs| x |buckets-per-doc| residual rows per
-            # iteration; this shape is a map-side partial aggregate of
-            # |docs| rows into ONE 65-number row (array_contains is
-            # codegen'd, no per-row Python or interpreter dispatch) —
-            # measured ~2x per GD job at sf0.1. Summation order
-            # differs from the explode plan, which is immaterial by
-            # construction: gradient sums carry ~1e-15 reassociation
-            # noise against the 1e-9 update grid (the module's
-            # partitioning-independence argument, unchanged).
-            grad_row = (
-                feats.select(
-                    ((p - F.col("__y")) / F.lit(float(n))).alias("__g"),
-                    "feats",
-                )
-                .agg(
-                    F.sum("__g").alias("gb"),
-                    *[
-                        F.sum(
-                            F.when(
-                                F.array_contains(
-                                    F.col("feats"), F.lit(f).cast("long")
-                                ),
-                                F.col("__g"),
-                            )
-                        ).alias(f"g{f}")
-                        for f in range(dim)
-                    ],
-                )
-                .collect()[0]
-            )
-            bias = round(bias - lr * grad_row["gb"], round_digits)
+            gb, g = _logreg_grad_arrow(feats, w, bias, n, dim)
+            bias = round(bias - lr * gb, round_digits)
             for f in range(dim):
-                g = grad_row[f"g{f}"]
-                if g is not None:  # no doc contains bucket f: no update
-                    w[f] = round(w[f] - lr * g, round_digits)
+                # an untouched bucket has an exact-zero gradient:
+                # w - lr*0 == w, already on the grid
+                w[f] = round(w[f] - lr * g[f], round_digits)
     finally:
         feats.unpersist()
     return w, bias
@@ -303,7 +257,7 @@ def _logreg_grad_arrow(
     hence batch-order-independent); the result differs from the JVM
     aggregation only in summation order — ~1e-15 noise against the
     1e-9 update grid, the module's standing partitioning-independence
-    argument (trajectory equality vs the ``"agg"`` twin is
+    argument (trajectory equality vs the pure-Python reference is
     pytest-pinned, and the DuckDB oracle re-derives the full
     trajectory per run)."""
     import math
@@ -415,7 +369,6 @@ def train_hashed_softmax(
     lr: float = 0.5,
     round_digits: int = 9,
     feature_sets: "DataFrame | None" = None,
-    grad_strategy: str = "arrow",
 ) -> "tuple[list[list[float]], list[float]]":
     """Full-batch gradient-descent SOFTMAX (multinomial logistic)
     regression on hashed binary features — the K-class extension of
@@ -437,22 +390,17 @@ def train_hashed_softmax(
     reassociation — absorbed by the 1e-9 update grid exactly as in
     :func:`train_hashed_logreg`.
 
-    Plan shape per iteration: ONE distributed job. ``grad_strategy``
-    picks its form: ``"arrow"`` (default) computes per-batch numpy
-    partial gradients in one mapInPandas scan, fsum-combined on the
-    driver — constant plan size, so Catalyst analysis cost does not
-    scale with K·dim (the flat expression tree measured ~2.3 s of
-    planning PER ITERATION at K=5·dim=32 — data-size-independent);
-    ``"agg"`` is the flat K·(dim+1)-column conditional aggregation
-    (the binary lane's shape, fully JVM). Both are full-batch and
-    land on the same rounded trajectory (pytest-pinned on the
-    fixture); the update runs driver-side on O(K·dim) floats. Labels
-    outside ``classes`` (or NULL) raise in-plan
+    Plan shape per iteration: ONE distributed job —
+    :func:`_softmax_grad_arrow` computes per-batch numpy partial
+    gradients in one mapInPandas scan, fsum-combined on the driver —
+    constant plan size, so Catalyst analysis cost does not scale with
+    K·dim (a flat K·(dim+1)-column conditional aggregation measured
+    ~2.3 s of planning PER ITERATION at K=5·dim=32 —
+    data-size-independent). The update runs driver-side on O(K·dim)
+    floats. Labels outside ``classes`` (or NULL) raise in-plan
     (:func:`_class_checked`)."""
     if iters < 1:
         raise ValueError(f"iters={iters!r} must be >= 1")
-    if grad_strategy not in ("arrow", "agg"):
-        raise ValueError(f"unknown grad_strategy {grad_strategy!r}")
     cls = [str(c) for c in classes]
     if len(cls) < 2:
         raise ValueError(f"classes={classes!r} must have >= 2 entries")
@@ -482,50 +430,13 @@ def train_hashed_softmax(
     bias = [0.0] * K
     try:
         for _ in range(iters):
-            if grad_strategy == "arrow":
-                gbs, gs = _softmax_grad_arrow(feats, w, bias, n, dim)
-                for c in range(K):
-                    bias[c] = round(bias[c] - lr * gbs[c], round_digits)
-                    for f in range(dim):
-                        # an untouched bucket has an exact-zero
-                        # gradient: w - lr*0 == w, already on the grid
-                        w[c][f] = round(w[c][f] - lr * gs[c][f], round_digits)
-                continue
-            zs = [_margin(w[c], bias[c]) for c in range(K)]
-            den: Column = F.exp(zs[0])
-            for c in range(1, K):
-                den = den + F.exp(zs[c])
-            resid = [
-                ((F.exp(zs[c]) / den - F.col(f"__y{c}")) / F.lit(float(n))).alias(
-                    f"__r{c}"
-                )
-                for c in range(K)
-            ]
-            grad_row = (
-                feats.select(*resid, "feats")
-                .agg(
-                    *[F.sum(f"__r{c}").alias(f"gb{c}") for c in range(K)],
-                    *[
-                        F.sum(
-                            F.when(
-                                F.array_contains(
-                                    F.col("feats"), F.lit(f).cast("long")
-                                ),
-                                F.col(f"__r{c}"),
-                            )
-                        ).alias(f"g{c}_{f}")
-                        for c in range(K)
-                        for f in range(dim)
-                    ],
-                )
-                .collect()[0]
-            )
+            gbs, gs = _softmax_grad_arrow(feats, w, bias, n, dim)
             for c in range(K):
-                bias[c] = round(bias[c] - lr * grad_row[f"gb{c}"], round_digits)
+                bias[c] = round(bias[c] - lr * gbs[c], round_digits)
                 for f in range(dim):
-                    g = grad_row[f"g{c}_{f}"]
-                    if g is not None:
-                        w[c][f] = round(w[c][f] - lr * g, round_digits)
+                    # an untouched bucket has an exact-zero gradient:
+                    # w - lr*0 == w, already on the grid
+                    w[c][f] = round(w[c][f] - lr * gs[c][f], round_digits)
     finally:
         feats.unpersist()
     return w, bias
@@ -546,8 +457,8 @@ def score_hashed_softmax(
     are literals; no join, no shuffle — a 100 TB corpus classifies in
     one codegen'd scan). The argmax runs over ROUNDED probabilities
     with ties to the earlier ``classes`` entry (max over (p, −c)
-    structs — the semdedup ``_nearest`` tie convention), so the
-    predicted label is engine-reproducible even on knife-edge docs."""
+    structs — the semdedup assignment's lower-index tie convention), so
+    the predicted label is engine-reproducible even on knife-edge docs."""
     cls = [str(c) for c in classes]
     K = len(cls)
     if not (K == len(weights) == len(biases)):

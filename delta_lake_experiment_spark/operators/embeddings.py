@@ -16,11 +16,12 @@ Spark-first AND value-oracled:
   joined with two marginals.
 - **The eigensolve is the NEW distributed-iteration pattern here**:
   unlike operators/pca.py (dim² covariance fits on the driver), the
-  PPMI matrix is V×V and lives in a TABLE of (i, j, value) rows. Each
-  power-iteration step is a DISTRIBUTED matvec — join the matrix rows
-  with the current vector, one groupBy(i) — and only O(V) vector state
-  ever reaches the driver (gated by ``max_vocab``, the repo's loud
-  collect-gate convention). Deflation for components beyond the first
+  PPMI matrix is V×V and lives in a TABLE of (i, j, value) rows. Above
+  a small vocabulary each power-iteration step is a DISTRIBUTED matvec
+  — one map pass over the row-partitioned, cached matrix with the
+  iterate in the closure — and only O(V) vector state ever reaches the
+  driver (gated by ``max_vocab``, the repo's loud collect-gate
+  convention). Deflation for components beyond the first
   NEVER densifies the matrix: ``M' v = M v − Σ_k λ_k u_k (u_k·v)``,
   and the correction terms are driver-side scalar×vector ops.
 - **Engine reproducibility is the operators/pca.py discipline**, which
@@ -28,9 +29,9 @@ Spark-first AND value-oracled:
   (PPMI at 1e-6, iterate at 1e-9), i.e. grid-ALIGNED sums landing near
   decimal rounding midpoints — the exact regime where "close + rounded"
   fails. So every per-row dot folds the row's nonzeros in ascending-j
-  order on BOTH engines (Spark: F.aggregate over a sort_array'ed
-  sparse row; DuckDB: list_dot_product over two ``ORDER BY j`` lists —
-  bit-identical fold), and every driver-side rounding is
+  order on BOTH engines (Spark: plain IEEE-double adds over each row's
+  (i, j)-sorted entries; DuckDB: list_dot_product over two ``ORDER BY
+  j`` lists — bit-identical fold), and every driver-side rounding is
   ``round_like_sql`` (DuckDB's scale/half-away/divide, bit-replicated).
 
 The reference engine has no vector or functions surface (SURVEY §2.2);
@@ -155,34 +156,17 @@ def ppmi_matrix(cooc: DataFrame, ppmi_digits: int = 6) -> DataFrame:
     )
 
 
-def _matvec(mat: DataFrame, v: "list[float]") -> "dict[int, float]":
-    """Distributed ``(M v)``: per matrix row, fold the nonzeros in
-    ascending-j order against the literal vector — the bit-pinned
-    fold (module docstring). One groupBy(i) shuffle; O(V) rows back."""
-    vlit = F.lit([float(x) for x in v])
-    row = F.sort_array(
-        F.collect_list(F.struct(F.col("j").alias("j"), F.col("m").alias("mv")))
-    )
-    dot = F.aggregate(
-        row,
-        F.lit(0.0),
-        lambda acc, e: acc + e["mv"] * F.element_at(vlit, e["j"] + 1),
-    )
-    out = mat.groupBy("i").agg(dot.alias("d")).collect()
-    return {int(r["i"]): float(r["d"]) for r in out}
-
-
 def _matvec_arrow(matp: DataFrame, v: "list[float]") -> "dict[int, float]":
-    """``_matvec`` with the iterate in the CLOSURE instead of a
-    V-element array literal (r17, guide §4 — the train_hashed_logreg
-    treatment): the literal spelling re-ran Catalyst analysis +
-    codegen over a 4096-element constant EVERY power-iteration step.
+    """Distributed ``(M v)`` with the iterate in the CLOSURE instead of
+    a V-element array literal (r17, guide §4 — the train_hashed_logreg
+    treatment): a literal spelling re-ran Catalyst analysis + codegen
+    over a 4096-element constant EVERY power-iteration step.
     ``matp`` must be hash-partitioned by ``i`` and sorted by (i, j)
     within partitions (prepared once, cached, by the caller), so each
     task streams its groups in order and folds each row's nonzeros in
     ascending-j sequence with plain IEEE-double adds — bit-identical
-    to the JVM fold and to DuckDB's ``list_dot_product`` over ``ORDER
-    BY j`` lists (NO fsum/pairwise reassociation: PPMI sums are
+    to :func:`_matvec_local` and to DuckDB's ``list_dot_product`` over
+    ``ORDER BY j`` lists (NO fsum/pairwise reassociation: PPMI sums are
     grid-aligned near rounding midpoints, the regime where "close +
     rounded" breaks — module docstring). One cache-local map job per
     step, no shuffle, constant plan."""
@@ -239,7 +223,7 @@ def _matvec_local(by_i: "dict[int, list]", v: "list[float]") -> "dict[int, float
     steps on a cached KB-sized table, pure scheduling overhead).
     Python floats are IEEE doubles and the fold is the same
     left-to-right ascending-j sequence, so the result is bit-identical
-    to the distributed forms (pytest-pinned)."""
+    to :func:`_matvec_arrow` (pytest-pinned)."""
     out = {}
     for i, row in by_i.items():
         acc = 0.0
@@ -260,7 +244,6 @@ def ppmi_topk_eigs(
     r: int = 2,
     p_iters: int = 6,
     round_digits: int = 9,
-    matvec_strategy: str = "auto",
 ) -> "list[tuple[float, list[float]]]":
     """Top-``r`` (eigenvalue, eigenvector) of the symmetric PPMI table
     by DISTRIBUTED power iteration with driver-side deflation
@@ -269,32 +252,26 @@ def ppmi_topk_eigs(
     vector is uniform round(1/sqrt(V)). Raises on a zero matvec
     (rank < r).
 
-    ``matvec_strategy``: ``"local"`` collects the (V ≤ 256 ⇒ ≤ 65k
-    entry) matrix ONCE and folds every step driver-side — zero
-    per-step Spark jobs; ``"arrow"`` partitions the matrix by row ONCE
-    and streams each step's iterate through a closure — constant plan,
-    no per-step Catalyst/codegen over a V-element literal; ``"fold"``
-    keeps the JVM literal-fold matvec; ``"auto"`` (default since r17)
-    picks by vocabulary size — ``local`` at V ≤ 256 where the matrix
-    is driver-trivial and per-step job scheduling dominates (measured
-    ~0.25 s/step of pure overhead), ``arrow`` above (the literal
-    path's planning cost grows with V: 0.95 s/step at V=1024, 2.7 s at
-    V=4096; the Arrow pass is flat ~0.4 s and the matrix no longer
-    belongs on the driver). All three run the identical ascending-j
-    sequential fold (pytest-pinned equal trajectories; requires unique
-    (i, j) entries, which an aggregated co-occurrence matrix has by
-    construction)."""
+    The matvec tier is picked from the vocabulary size: at V <=
+    ``_MATVEC_ARROW_MIN_V`` the (<= 65k entry) matrix is collected ONCE
+    and every step folds driver-side — zero per-step Spark jobs, where
+    job scheduling dominated (measured ~0.25 s/step of pure overhead);
+    above it the matrix is partitioned by row ONCE and each step
+    streams the iterate through a closure (:func:`_matvec_arrow`) —
+    constant plan, no per-step Catalyst/codegen over a V-element
+    literal (a literal fold's planning grew with V: 0.95 s/step at
+    V=1024, 2.7 s at V=4096; the Arrow pass is flat ~0.4 s and the
+    matrix no longer belongs on the driver). Both tiers run the
+    identical ascending-j sequential fold (pytest-pinned equal
+    trajectories; requires unique (i, j) entries, which an aggregated
+    co-occurrence matrix has by construction)."""
     if not 1 <= r:
         raise ValueError(f"r={r!r} must be >= 1")
     if p_iters < 1:
         raise ValueError(f"p_iters={p_iters!r} must be >= 1")
-    if matvec_strategy not in ("arrow", "fold", "auto", "local"):
-        raise ValueError(f"unknown matvec_strategy {matvec_strategy!r}")
     rd = int(round_digits)
     V = int(size)
-    if matvec_strategy == "auto":
-        matvec_strategy = "arrow" if V > _MATVEC_ARROW_MIN_V else "local"
-    if matvec_strategy == "local":
+    if V <= _MATVEC_ARROW_MIN_V:
         by_i: dict = {}
         for row in mat.select("i", "j", "m").collect():
             by_i.setdefault(int(row["i"]), []).append(
@@ -305,15 +282,14 @@ def ppmi_topk_eigs(
         return _power_iterate(
             lambda v: _matvec_local(by_i, v), V, r, p_iters, rd
         )
-    if matvec_strategy == "arrow":
-        # one shuffle + per-partition sort, cached for ALL r*(p_iters+1)
-        # matvec steps: each group's rows sit contiguous and ascending-j
-        # in one partition, so every step is a cache-local map job
-        mat = mat.repartition("i").sortWithinPartitions("i", "j")
-    mat = mat.persist()
-    mv_fn = _matvec_arrow if matvec_strategy == "arrow" else _matvec
+    # one shuffle + per-partition sort, cached for ALL r*(p_iters+1)
+    # matvec steps: each group's rows sit contiguous and ascending-j in
+    # one partition, so every step is a cache-local map job
+    mat = mat.repartition("i").sortWithinPartitions("i", "j").persist()
     try:
-        return _power_iterate(lambda v: mv_fn(mat, v), V, r, p_iters, rd)
+        return _power_iterate(
+            lambda v: _matvec_arrow(mat, v), V, r, p_iters, rd
+        )
     finally:
         mat.unpersist()
 
@@ -321,11 +297,11 @@ def ppmi_topk_eigs(
 def _power_iterate(
     step, V: int, r: int, p_iters: int, rd: int
 ) -> "list[tuple[float, list[float]]]":
-    """The strategy-independent power-iteration/deflation loop of
+    """The tier-independent power-iteration/deflation loop of
     :func:`ppmi_topk_eigs`: ``step(v) -> {i: (M v)_i}`` is whichever
-    matvec the caller picked; everything driver-side here (deflation,
-    rounding, normalization, sign fixing) is one spelling for all
-    strategies, so they cannot drift."""
+    matvec tier the vocabulary size picked; everything driver-side here
+    (deflation, rounding, normalization, sign fixing) is one spelling
+    for both tiers, so they cannot drift."""
     out: List[Tuple[float, List[float]]] = []
     v0 = round_like_sql(1.0 / math.sqrt(V), rd)
     for _ in range(r):

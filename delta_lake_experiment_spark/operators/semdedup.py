@@ -11,9 +11,9 @@ the otherwise-quadratic pair search.
 100 TB design:
 - **k-means is the "aggregate distributed, iterate on metadata"
   pattern** (BPE / IVF / the logreg classifier here): each Lloyd
-  iteration is one map-only assignment pass (centroids enter the plan
-  as literal arrays — no join) plus one groupBy shuffle whose output
-  is k × (dim + 1) numbers, collected to the driver. Centroid count k
+  iteration is one Arrow scan that assigns every vector (centroids
+  ride in the closure — no join) and emits per-cluster partial sums,
+  so k × (dim + 2) numbers reach the driver. Centroid count k
   scales with corpus size (SemDeDup used ~100k clusters for web
   scale), so the within-cluster pair join stays bounded: expected
   cluster size = N/k documents, and the self-join on the cluster id
@@ -74,8 +74,8 @@ def _dot_lit(vec: Column, c: Sequence[float]) -> Column:
     dim=64) cost MORE in Catalyst analysis/codegen than the
     interpreter dispatches it saved (isolated sf0.1 run: construct
     5.7 s -> 10-15 s). The fold keeps the plan tree O(1) per
-    centroid; assignment throughput at true scale is the gemm pair
-    stage's job, not this expression's."""
+    centroid; bulk centroid assignment runs through
+    :func:`_fold_argmax` instead of this expression."""
     return F.aggregate(
         F.zip_with(vec, F.lit([float(x) for x in c]), lambda a, b: a * b),
         F.lit(0.0),
@@ -83,21 +83,40 @@ def _dot_lit(vec: Column, c: Sequence[float]) -> Column:
     )
 
 
-def _nearest(vec: Column, centroids: Sequence[Sequence[float]], round_digits: int) -> Column:
-    """Index of the max-dot-product centroid over ROUNDED scores, ties
-    to the LOWER index (array_max over (score, -index) structs picks
-    max score then max -index = min index) — the rounding + tie rule is
-    what makes the assignment engine-reproducible."""
-    scored = F.array(
-        *[
-            F.struct(
-                F.round(_dot_lit(vec, c), round_digits).alias("s"),
-                F.lit(-j).alias("nj"),
-            )
-            for j, c in enumerate(centroids)
-        ]
+def _fold_argmax(mat, C, round_digits: int, cc=None):
+    """Index of the nearest centroid row of ``C`` for every row of
+    ``mat`` (numpy float64) — THE certified assignment kernel, shared
+    by every k-means / PQ pass here and value-identical to the DuckDB
+    oracles' ``ORDER BY round(score) DESC, j ASC`` by construction:
+
+    - dot products accumulate column-by-column over the dimension
+      (``acc = acc + prod[:, d]``, vectorized across rows) — the exact
+      left-to-right association of DuckDB's list_dot_product, NOT a
+      BLAS gemm (pairwise summation order);
+    - with ``cc`` (the euclidean lane: per-centroid self-dots) the
+      score is ``2*dot - cc[j]``, else the plain dot;
+    - rounding is the vectorized DuckDB replication
+      (functions/rounding.py's scale/half-away/divide, applied with
+      numpy primitives), so scores equal the ORACLE's to the bit;
+    - ``np.argmax`` returns the FIRST maximum — the oracle's
+      lower-index tie-break."""
+    import numpy as np
+
+    from delta_lake_experiment_spark.functions.rounding import (
+        round_like_sql_np,
     )
-    return (-F.array_max(scored)["nj"]).cast("int")
+
+    n = mat.shape[0]
+    scores = np.empty((n, C.shape[0]), dtype=np.float64)
+    for j in range(C.shape[0]):
+        prod = mat * C[j]
+        acc = np.zeros(n, dtype=np.float64)
+        for d in range(prod.shape[1]):
+            # in-place: identical left-to-right fold, no per-step
+            # temporary (k x dim of them otherwise)
+            np.add(acc, prod[:, d], out=acc)
+        scores[:, j] = acc if cc is None else acc * 2.0 - cc[j]
+    return np.argmax(round_like_sql_np(scores, int(round_digits)), axis=1)
 
 
 def _assign_arrow(
@@ -106,59 +125,22 @@ def _assign_arrow(
     centroids: Sequence[Sequence[float]],
     round_digits: int,
 ) -> DataFrame:
-    """Arrow fast path for the centroid assignment: same columns as
-    ``norm`` plus ``__c`` — value-identical to the ``_nearest``
-    expression by construction, not by luck:
-
-    - dot products accumulate column-by-column over the dimension
-      (``acc = acc + prod[:, d]``, vectorized across rows) — the
-      exact left-to-right association of the JVM zip_with/aggregate
-      fold and DuckDB's list_dot_product, NOT a BLAS gemm (pairwise
-      summation order);
-    - rounding is the vectorized DuckDB replication
-      (functions/rounding.py's scale/half-away/divide, applied with
-      numpy primitives), so scores equal the ORACLE's to the bit —
-      vs the hof path's JVM F.round they can differ only where JVM
-      and DuckDB rounding modes split on the same double, the
-      measure-zero edge for these generic sums (raw normalized
-      vectors against grid centroids), where this path sides with
-      the oracle;
-    - ``np.argmax`` returns the FIRST maximum — the lower-index
-      tie-break ``_nearest`` encodes via max(struct(s, -j)).
-
-    Why it exists: the interpreted HOF fold dispatches
-    rows x k x dim lambda calls per assignment pass (CodegenFallback
-    — measured seconds per pass at sf0.1 across the four k-means
-    consumers); this path is one Arrow batch scan. ``"hof"`` remains
-    available and the two are pytest-pinned equal on the fixture."""
+    """The centroid assignment as one Arrow batch scan: same columns as
+    ``norm`` plus ``__c`` (:func:`_fold_argmax`). An interpreted JVM
+    higher-order fold would dispatch rows x k x dim lambda calls per
+    pass (CodegenFallback — measured seconds per pass at sf0.1 across
+    the four k-means consumers)."""
     import numpy as np
-    import pandas as pd
-
-    from delta_lake_experiment_spark.functions.rounding import (
-        round_like_sql_np,
-    )
 
     C = np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
-    rd = int(round_digits)
 
     def run(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.asarray(list(pdf[vec_field]), dtype=np.float64)
-            n = len(pdf)
-            scores = np.empty((n, C.shape[0]), dtype=np.float64)
-            for j in range(C.shape[0]):
-                prod = mat * C[j]
-                acc = np.zeros(n, dtype=np.float64)
-                for d in range(prod.shape[1]):
-                    # in-place: identical left-to-right fold, no
-                    # per-step temporary (k x dim of them otherwise)
-                    np.add(acc, prod[:, d], out=acc)
-                scores[:, j] = acc
-            rounded = round_like_sql_np(scores, rd)
             out = pdf.copy()
-            out["__c"] = np.argmax(rounded, axis=1).astype("int32")
+            out["__c"] = _fold_argmax(mat, C, round_digits).astype("int32")
             yield out
 
     schema = ", ".join(
@@ -197,13 +179,11 @@ def _lloyd_means_arrow(
     partial sums in a single Arrow scan, combined driver-side with
     ``fsum`` — replacing the assignment pass PLUS a (dim+1)-column
     groupBy/collect per iteration with ONE job whose output is
-    k×(dim+2) numbers. Scores follow the exact ``_assign_arrow``
-    discipline (column-order fold, vectorized DuckDB rounding,
-    first-max argmax), so assignments are identical; the per-cluster
-    MEANS differ from the ``avg()`` they replace only in summation
-    association — ~1e-16 noise against the 1e-9 centroid grid, the
-    module's standing partitioning-independence argument (the
-    replaced ``avg()`` was itself partition-order-dependent).
+    k×(dim+2) numbers. Assignments are :func:`_fold_argmax`'s, as in
+    :func:`_assign_arrow`; the per-cluster MEANS differ from the
+    oracle's ``AVG()`` only in summation association — ~1e-16 noise
+    against the 1e-9 centroid grid, the module's standing
+    partitioning-independence argument.
     Returns ``{cluster: [unrounded mean]}``; empty clusters are
     absent (callers keep the previous centroid)."""
     import math
@@ -211,27 +191,14 @@ def _lloyd_means_arrow(
     import numpy as np
     import pandas as pd
 
-    from delta_lake_experiment_spark.functions.rounding import (
-        round_like_sql_np,
-    )
-
     C = np.asarray([[float(x) for x in c] for c in centroids], dtype=np.float64)
-    rd = int(round_digits)
 
     def run(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.asarray(list(pdf[vec_field]), dtype=np.float64)
-            n = len(pdf)
-            scores = np.empty((n, C.shape[0]), dtype=np.float64)
-            for j in range(C.shape[0]):
-                prod = mat * C[j]
-                acc = np.zeros(n, dtype=np.float64)
-                for d in range(prod.shape[1]):
-                    np.add(acc, prod[:, d], out=acc)
-                scores[:, j] = acc
-            cl = np.argmax(round_like_sql_np(scores, rd), axis=1)
+            cl = _fold_argmax(mat, C, round_digits)
             cs, ns, ss = [], [], []
             for j in np.unique(cl):
                 rows_j = mat[cl == j]
@@ -300,17 +267,12 @@ def deterministic_kmeans(
     iters: int = 2,
     salt: str = "sem",
     round_digits: int = 9,
-    assign_strategy: str = "arrow",
 ) -> list:
     """Lloyd's k-means with rounded, engine-reproducible steps; returns
     the final centroid list (each coordinate rounded). One distributed
-    job per iteration: map-only assignment + a k x (dim+1) aggregate
-    (per-dimension means via map-side-combined ``avg`` columns).
-    ``assign_strategy``: ``"arrow"`` (default — the _assign_arrow
-    fast path, exact fold order + oracle-replicated rounding) or
-    ``"hof"`` (the JVM expression; pytest-pinned equal)."""
-    if assign_strategy not in ("arrow", "hof"):
-        raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
+    job per iteration: the fused Arrow scan of
+    :func:`_lloyd_means_arrow` (assignment + per-cluster partial sums,
+    k x (dim+2) numbers back)."""
     # normalize ONCE and keep the unit vectors cached across Lloyd
     # iterations (each iteration otherwise re-reads and re-normalizes
     # the source); fully consumed inside this call, so eagerly
@@ -327,31 +289,8 @@ def deterministic_kmeans(
         cents = _seed_cached(norm, k, salt)
         if not cents:
             raise ValueError("deterministic_kmeans: empty input")
-        dim = len(cents[0])
         for _ in range(iters):
-            if assign_strategy == "arrow":
-                # fused: assignment + per-cluster sums in one scan
-                means = _lloyd_means_arrow(norm, "v", cents, round_digits)
-            else:
-                assigned = norm.withColumn(
-                    "__c", _nearest(F.col("v"), cents, round_digits)
-                )
-                rows = (
-                    assigned.groupBy("__c")
-                    .agg(
-                        *[
-                            F.avg(F.element_at(F.col("v"), i + 1)).alias(
-                                f"m{i}"
-                            )
-                            for i in range(dim)
-                        ]
-                    )
-                    .collect()
-                )
-                means = {
-                    r["__c"]: [float(r[f"m{i}"]) for i in range(dim)]
-                    for r in rows
-                }
+            means = _lloyd_means_arrow(norm, "v", cents, round_digits)
             # round_like_sql, not Python round: the one driver-side
             # rounding in this loop compared against DuckDB round
             # (functions/rounding.py contract; means are generic so
@@ -376,7 +315,6 @@ def kmeans_assignments(
     iters: int = 2,
     salt: str = "sem",
     round_digits: int = 9,
-    assign_strategy: str = "arrow",
 ) -> DataFrame:
     """(id_col, cluster) — just the deterministic k-means assignment,
     for consumers that want the CLUSTERING without the dedup pair
@@ -384,15 +322,12 @@ def kmeans_assignments(
     per-cluster routing). Same seeds/rounding/tie-breaks as
     :func:`semantic_dedup`; the oracle fragment is
     :func:`semantic_pair_ctes`'s ``sfinal``."""
-    if assign_strategy not in ("arrow", "hof"):
-        raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
     cents = deterministic_kmeans(
         df, id_col, vec_col, k=k, iters=iters, salt=salt,
-        round_digits=round_digits, assign_strategy=assign_strategy,
+        round_digits=round_digits,
     )
     return assign_to_centroids(
-        df, id_col, vec_col, cents,
-        round_digits=round_digits, assign_strategy=assign_strategy,
+        df, id_col, vec_col, cents, round_digits=round_digits
     )
 
 
@@ -402,7 +337,6 @@ def assign_to_centroids(
     vec_col: str,
     centroids: "Sequence[Sequence[float]]",
     round_digits: int = 9,
-    assign_strategy: str = "arrow",
 ) -> DataFrame:
     """(id_col, cluster) — assignment of each (l2-normalized) vector
     to its nearest centroid under the certified rounded-dot +
@@ -413,16 +347,9 @@ def assign_to_centroids(
     kmeans_assignments would double the Lloyd work). Same oracle
     fragment as :func:`kmeans_assignments` (semantic_pair_ctes'
     ``sfinal``)."""
-    if assign_strategy not in ("arrow", "hof"):
-        raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
     norm = df.select(F.col(id_col), _norm_checked(vec_col).alias("__v"))
-    if assign_strategy == "arrow":
-        return _assign_arrow(norm, "__v", centroids, round_digits).select(
-            F.col(id_col), F.col("__c").alias("cluster")
-        )
-    return norm.select(
-        F.col(id_col),
-        _nearest(F.col("__v"), centroids, round_digits).alias("cluster"),
+    return _assign_arrow(norm, "__v", centroids, round_digits).select(
+        F.col(id_col), F.col("__c").alias("cluster")
     )
 
 
@@ -438,44 +365,13 @@ def assign_to_centroids(
 # (bit-equal by the fold contract), never shipped across.
 
 
-def nearest_euclid(
-    vec: Column, centroids: Sequence[Sequence[float]], round_digits: int
-) -> Column:
-    """Index of the euclidean-nearest centroid over ROUNDED
-    ``2*dot - cc`` scores, ties to the LOWER index — the euclidean
-    twin of ``_nearest``."""
-    from delta_lake_experiment_spark.operators.pca import _fold_dot
-
-    scored = F.array(
-        *[
-            F.struct(
-                F.round(
-                    _dot_lit(vec, c) * F.lit(2.0) - F.lit(_fold_dot(c, c)),
-                    round_digits,
-                ).alias("s"),
-                F.lit(-j).alias("nj"),
-            )
-            for j, c in enumerate(centroids)
-        ]
-    )
-    return (-F.array_max(scored)["nj"]).cast("int")
-
-
-def pq_assign_codes(
-    df: DataFrame,
-    vec_field: str,
-    books: Sequence[Sequence[Sequence[float]]],
-    round_digits: int,
-) -> DataFrame:
-    """Arrow pass computing ALL m subspace codes in one scan — the
-    ``_assign_arrow`` discipline (column-by-column fold order,
-    vectorized DuckDB rounding, first-max argmax) with the euclidean
-    ``2*dot - cc`` score per subspace. Adds ``__c0..__c{m-1}``."""
+def _pq_books_np(books: Sequence[Sequence[Sequence[float]]]):
+    """``(Cs, ccs, sub)``: each codebook as a float64 matrix, its
+    per-codeword self-dots (the pinned :func:`_fold_dot`, computed from
+    the same grid-rounded values the oracle reads) and the subspace
+    width — the euclidean inputs of :func:`_fold_argmax`."""
     import numpy as np
 
-    from delta_lake_experiment_spark.functions.rounding import (
-        round_like_sql_np,
-    )
     from delta_lake_experiment_spark.operators.pca import _fold_dot
 
     Cs = [
@@ -486,27 +382,33 @@ def pq_assign_codes(
         np.asarray([_fold_dot(c, c) for c in book], dtype=np.float64)
         for book in books
     ]
-    sub = Cs[0].shape[1]
-    rd = int(round_digits)
+    return Cs, ccs, Cs[0].shape[1]
+
+
+def pq_assign_codes(
+    df: DataFrame,
+    vec_field: str,
+    books: Sequence[Sequence[Sequence[float]]],
+    round_digits: int,
+) -> DataFrame:
+    """Arrow pass computing ALL m subspace codes in one scan —
+    :func:`_fold_argmax` with the euclidean ``2*dot - cc`` score per
+    subspace. Adds ``__c0..__c{m-1}``."""
+    import numpy as np
+
+    Cs, ccs, sub = _pq_books_np(books)
 
     def run(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.asarray(list(pdf[vec_field]), dtype=np.float64)
-            n = len(pdf)
             out = pdf.copy()
             for s, (C, cc) in enumerate(zip(Cs, ccs)):
                 sm = mat[:, s * sub:(s + 1) * sub]
-                scores = np.empty((n, C.shape[0]), dtype=np.float64)
-                for j in range(C.shape[0]):
-                    prod = sm * C[j]
-                    acc = np.zeros(n, dtype=np.float64)
-                    for d in range(prod.shape[1]):
-                        np.add(acc, prod[:, d], out=acc)
-                    scores[:, j] = acc * 2.0 - cc[j]
-                rounded = round_like_sql_np(scores, rd)
-                out[f"__c{s}"] = np.argmax(rounded, axis=1).astype("int32")
+                out[f"__c{s}"] = _fold_argmax(
+                    sm, C, round_digits, cc
+                ).astype("int32")
             yield out
 
     schema = ", ".join(
@@ -523,11 +425,10 @@ def _pq_lloyd_means_arrow(
     round_digits: int,
 ) -> dict:
     """The euclidean/subspace twin of :func:`_lloyd_means_arrow`
-    (r17): ONE Arrow scan computes every subspace's codes
-    (:func:`pq_assign_codes`' ``2*dot − cc`` discipline — identical
-    fold order, rounding and argmax) AND the per-(subspace, codeword)
-    partial sums, replacing the persisted code frame plus m separate
-    ``groupBy``/collect jobs per iteration. Returns
+    (r17): ONE Arrow scan computes every subspace's codes (the
+    ``2*dot − cc`` :func:`_fold_argmax` of :func:`pq_assign_codes`) AND
+    the per-(subspace, codeword) partial sums — one job per iteration,
+    no persisted code frame and no per-subspace ``groupBy``. Returns
     ``{(s, j): [unrounded mean over the s-slice]}``; empty codewords
     are absent. Same summation-association argument as the cosine
     twin."""
@@ -536,39 +437,17 @@ def _pq_lloyd_means_arrow(
     import numpy as np
     import pandas as pd
 
-    from delta_lake_experiment_spark.functions.rounding import (
-        round_like_sql_np,
-    )
-    from delta_lake_experiment_spark.operators.pca import _fold_dot
-
-    Cs = [
-        np.asarray([[float(x) for x in c] for c in book], dtype=np.float64)
-        for book in books
-    ]
-    ccs = [
-        np.asarray([_fold_dot(c, c) for c in book], dtype=np.float64)
-        for book in books
-    ]
-    sub = Cs[0].shape[1]
-    rd = int(round_digits)
+    Cs, ccs, sub = _pq_books_np(books)
 
     def run(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.asarray(list(pdf[vec_field]), dtype=np.float64)
-            n = len(pdf)
             out_s, out_j, out_n, out_v = [], [], [], []
             for s, (C, cc) in enumerate(zip(Cs, ccs)):
                 sm = mat[:, s * sub:(s + 1) * sub]
-                scores = np.empty((n, C.shape[0]), dtype=np.float64)
-                for j in range(C.shape[0]):
-                    prod = sm * C[j]
-                    acc = np.zeros(n, dtype=np.float64)
-                    for d in range(prod.shape[1]):
-                        np.add(acc, prod[:, d], out=acc)
-                    scores[:, j] = acc * 2.0 - cc[j]
-                cl = np.argmax(round_like_sql_np(scores, rd), axis=1)
+                cl = _fold_argmax(sm, C, round_digits, cc)
                 for j in np.unique(cl):
                     rows_j = sm[cl == j]
                     out_s.append(int(s))
@@ -608,7 +487,6 @@ def deterministic_pq_codebooks(
     iters: int = 1,
     salt: str = "pq",
     round_digits: int = 9,
-    assign_strategy: str = "arrow",
 ) -> list:
     """``m`` product-quantization codebooks (each ``k`` codewords over
     the s-th equal slice of ``vec_col``) by EUCLIDEAN Lloyd iterations
@@ -620,13 +498,12 @@ def deterministic_pq_codebooks(
 
     One seed collect serves every subspace (the k lowest
     ``md5(salt || id)`` FULL vectors, sliced driver-side — standard PQ
-    init: sample k training points); each iteration is ONE Arrow
-    assignment scan for all m subspaces plus m tiny per-subspace mean
-    aggregations over the cached codes. The oracle fragment is
-    :func:`pq_codebook_ctes` (one s-keyed chain, not m chains — the
-    flat shape keeps DuckDB's planner linear in m)."""
-    if assign_strategy not in ("arrow", "hof"):
-        raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
+    init: sample k training points); each iteration is ONE fused
+    Arrow scan (:func:`_pq_lloyd_means_arrow`) that assigns all m
+    subspaces and emits every per-(subspace, codeword) partial sum.
+    The oracle fragment is :func:`pq_codebook_ctes` (one s-keyed
+    chain, not m chains — the flat shape keeps DuckDB's planner linear
+    in m)."""
     if m < 1:
         raise ValueError(f"m={m!r} must be >= 1")
     from delta_lake_experiment_spark.functions.rounding import round_like_sql
@@ -655,59 +532,16 @@ def deterministic_pq_codebooks(
             for sp in range(m)
         ]
         for _ in range(iters):
-            if assign_strategy == "arrow":
-                # fused (r17): every subspace's codes + per-(s, j)
-                # sums in ONE scan — no persisted code frame, no m
-                # separate groupBy jobs
-                means = _pq_lloyd_means_arrow(raw, "v", books, round_digits)
-                for s in range(m):
-                    books[s] = [
-                        [
-                            round_like_sql(x, round_digits)
-                            for x in means[(s, j)]
-                        ]
-                        if (s, j) in means
-                        else books[s][j]
-                        for j in range(len(books[s]))
-                    ]
-                continue
-            assigned = raw
+            # fused (r17): every subspace's codes + per-(s, j) sums in
+            # ONE scan — no persisted code frame, no m groupBy jobs
+            means = _pq_lloyd_means_arrow(raw, "v", books, round_digits)
             for s in range(m):
-                assigned = assigned.withColumn(
-                    f"__c{s}",
-                    nearest_euclid(
-                        F.slice(F.col("v"), s * sub + 1, sub),
-                        books[s],
-                        round_digits,
-                    ),
-                )
-            assigned = assigned.persist()
-            try:
-                for s in range(m):
-                    rows = (
-                        assigned.groupBy(f"__c{s}")
-                        .agg(
-                            *[
-                                F.avg(
-                                    F.element_at(F.col("v"), s * sub + p + 1)
-                                ).alias(f"m{p}")
-                                for p in range(sub)
-                            ]
-                        )
-                        .collect()
-                    )
-                    new = {
-                        r[f"__c{s}"]: [
-                            round_like_sql(float(r[f"m{p}"]), round_digits)
-                            for p in range(sub)
-                        ]
-                        for r in rows
-                    }
-                    books[s] = [
-                        new.get(j, books[s][j]) for j in range(len(books[s]))
-                    ]
-            finally:
-                assigned.unpersist()
+                books[s] = [
+                    [round_like_sql(x, round_digits) for x in means[(s, j)]]
+                    if (s, j) in means
+                    else books[s][j]
+                    for j in range(len(books[s]))
+                ]
     finally:
         raw.unpersist()
     return books
@@ -806,147 +640,108 @@ def _assigned_and_pairs(
     salt: str,
     round_digits: int,
     sim_digits: int,
-    pair_strategy: str = "gemm",
     block_size: int = 4096,
-    assign_strategy: str = "arrow",
 ) -> "tuple[DataFrame, DataFrame]":
     """Shared core: (assigned, pairs) where ``assigned`` is the
     persisted (``__i``, ``__v`` normalized, ``__c`` cluster) table and
-    ``pairs`` the within-cluster cosine matches (id_a < id_b).
+    ``pairs`` the within-cluster cosine matches (id_a < id_b) at the
+    ``sim_digits`` rounding grid.
 
-    ``pair_strategy`` picks the scorer (identical pair set at the
-    ``sim_digits`` rounding grid — the embedding-dedup precedent,
-    operators/dedup.py::embedding_near_duplicates):
-
-    - ``"gemm"`` (default): clusters are TILED into sub-blocks of at
-      most ~``block_size`` vectors (``pmod(xxhash64(id), ceil(|c| /
-      block_size))`` — the block-bundle pattern of
-      operators/dedup.py::embedding_near_duplicates), each sub-block
-      becomes one bundle row (``collect_list``), and every unordered
-      sub-block pair within a cluster is scored with one numpy
-      ``mat_a @ mat_b.T`` — BLAS throughput instead of one interpreted
-      higher-order fold per candidate pair (CodegenFallback; measured
-      ~3x on the sf0.1 fixture). Peak per-task memory is two bundles
-      (~``block_size`` · dim · 8 B each) REGARDLESS of cluster skew —
-      a degenerate k-means (under-k'd corpus, one giant cluster) costs
-      quadratic flops, as SemDeDup inherently does, but never
-      materializes more than two tiles in one Arrow row. BLAS sums
-      pairwise vs the fold's sequential order: at the 1e-6 grid a
-      discrepancy crossing a rounding boundary is astronomically rare
-      (and the DuckDB oracle hash-check re-certifies every run).
-    - ``"hof"``: the JVM fold join — bit-reproducible against any
-      sequential-fold oracle; the strategies are pytest-pinned equal
-      on the fixture corpus (as are tiled vs single-tile gemm).
+    Clusters are TILED into sub-blocks of at most ~``block_size``
+    vectors (``pmod(xxhash64(id), ceil(|c| / block_size))`` — the
+    block-bundle pattern of
+    operators/dedup.py::embedding_near_duplicates), each sub-block
+    becomes one bundle row (``collect_list``), and every unordered
+    sub-block pair within a cluster is scored with one numpy
+    ``mat_a @ mat_b.T`` — BLAS throughput instead of one interpreted
+    higher-order fold per candidate pair (CodegenFallback; measured
+    ~3x on the sf0.1 fixture). Peak per-task memory is two bundles
+    (~``block_size`` · dim · 8 B each) REGARDLESS of cluster skew — a
+    degenerate k-means (under-k'd corpus, one giant cluster) costs
+    quadratic flops, as SemDeDup inherently does, but never
+    materializes more than two tiles in one Arrow row. BLAS sums
+    pairwise vs the oracle's sequential fold: at the 1e-6 grid a
+    discrepancy crossing a rounding boundary is astronomically rare
+    (and the DuckDB oracle, :func:`semantic_pair_ctes`' ``sem_pairs``,
+    re-certifies every run; tiled == single-tile is pytest-pinned).
     """
-    if pair_strategy not in ("gemm", "hof"):
-        raise ValueError(f"unknown pair_strategy {pair_strategy!r}")
+    import numpy as np
+    import pandas as pd
+
     if block_size < 1:
         raise ValueError(f"block_size={block_size!r} must be >= 1")
-    if assign_strategy not in ("arrow", "hof"):
-        raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
     cents = deterministic_kmeans(
         df, id_col, vec_col, k=k, iters=iters, salt=salt,
-        round_digits=round_digits, assign_strategy=assign_strategy,
+        round_digits=round_digits,
     )
     base = df.select(
         F.col(id_col).alias("__i"), _norm_checked(vec_col).alias("__v")
     )
-    norm = (
-        _assign_arrow(base, "__v", cents, round_digits)
-        if assign_strategy == "arrow"
-        else base.withColumn("__c", _nearest(F.col("__v"), cents, round_digits))
-    )
     # the assigned table feeds both sides of the pair join and the
     # final output; persist so normalization + assignment run once
-    norm = norm.persist()
-    if pair_strategy == "gemm":
-        import numpy as np
-        import pandas as pd
+    norm = _assign_arrow(base, "__v", cents, round_digits).persist()
+    thr, rd = float(threshold), int(sim_digits)
+    id_dt = df.schema[id_col].dataType.simpleString()
+    # Per-cluster tile count: O(k) rows, broadcast back onto the
+    # assigned table so the sub-block id is a map-side column.
+    sizes = norm.groupBy("__c").agg(
+        F.ceil(F.count(F.lit(1)) / F.lit(int(block_size)))
+        .cast("int")
+        .alias("__nb")
+    )
+    bundles = (
+        norm.join(F.broadcast(sizes), "__c")
+        .withColumn(
+            "__b",
+            F.pmod(F.xxhash64(F.col("__i")), F.col("__nb")).cast("int"),
+        )
+        .groupBy("__c", "__nb", "__b")
+        .agg(
+            F.collect_list(
+                F.struct(F.col("__i").alias("id"), F.col("__v").alias("v"))
+            ).alias("bundle")
+        )
+    )
+    # Every unordered sub-block pair (b, q), b <= q, within a cluster:
+    # explode sequence(b, nb-1) on the left, equi-join the right bundle
+    # on (cluster, q) — the P(P+1)/2 tile-pair plan.
+    left = bundles.withColumnRenamed("bundle", "bundle_a").withColumn(
+        "__q", F.explode(F.sequence(F.col("__b"), F.col("__nb") - 1))
+    )
+    right = bundles.select(
+        "__c", F.col("__b").alias("__q"), F.col("bundle").alias("bundle_b")
+    )
+    joined = left.join(right, ["__c", "__q"])
 
-        thr, rd = float(threshold), int(sim_digits)
-        id_dt = df.schema[id_col].dataType.simpleString()
-        # Per-cluster tile count: O(k) rows, broadcast back onto the
-        # assigned table so the sub-block id is a map-side column.
-        sizes = norm.groupBy("__c").agg(
-            F.ceil(F.count(F.lit(1)) / F.lit(int(block_size)))
-            .cast("int")
-            .alias("__nb")
-        )
-        bundles = (
-            norm.join(F.broadcast(sizes), "__c")
-            .withColumn(
-                "__b",
-                F.pmod(F.xxhash64(F.col("__i")), F.col("__nb")).cast("int"),
-            )
-            .groupBy("__c", "__nb", "__b")
-            .agg(
-                F.collect_list(
-                    F.struct(F.col("__i").alias("id"), F.col("__v").alias("v"))
-                ).alias("bundle")
-            )
-        )
-        # Every unordered sub-block pair (b, q), b <= q, within a
-        # cluster: explode sequence(b, nb-1) on the left, equi-join the
-        # right bundle on (cluster, q) — the P(P+1)/2 tile-pair plan.
-        left = bundles.withColumnRenamed("bundle", "bundle_a").withColumn(
-            "__q", F.explode(F.sequence(F.col("__b"), F.col("__nb") - 1))
-        )
-        right = bundles.select(
-            "__c", F.col("__b").alias("__q"), F.col("bundle").alias("bundle_b")
-        )
-        joined = left.join(right, ["__c", "__q"])
+    def _score(batches):
+        for pdf in batches:
+            parts = []
+            for blk_b, blk_q, ba, bb in zip(
+                pdf["__b"], pdf["__q"], pdf["bundle_a"], pdf["bundle_b"]
+            ):
+                ids_a = np.asarray([e["id"] for e in ba])
+                ids_b = np.asarray([e["id"] for e in bb])
+                mat_a = np.asarray([e["v"] for e in ba], dtype=np.float64)
+                mat_b = np.asarray([e["v"] for e in bb], dtype=np.float64)
+                cos = np.round(mat_a @ mat_b.T, rd)
+                mask = cos >= thr
+                if blk_b == blk_q:
+                    mask &= ids_a[:, None] < ids_b[None, :]
+                ii, jj = np.nonzero(mask)
+                if not len(ii):
+                    continue
+                ia, ib = ids_a[ii], ids_b[jj]
+                # np.where, not np.minimum/maximum: the min/max
+                # ufuncs have no string loops on numpy 1.x, and
+                # id_dt is derived generically so string ids are
+                # in-contract ('<' comparisons do support strings)
+                lo = np.where(ia < ib, ia, ib)
+                hi = np.where(ia < ib, ib, ia)
+                parts.append(pd.DataFrame({"id_a": lo, "id_b": hi}))
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
 
-        def _score(batches):
-            for pdf in batches:
-                parts = []
-                for blk_b, blk_q, ba, bb in zip(
-                    pdf["__b"], pdf["__q"], pdf["bundle_a"], pdf["bundle_b"]
-                ):
-                    ids_a = np.asarray([e["id"] for e in ba])
-                    ids_b = np.asarray([e["id"] for e in bb])
-                    mat_a = np.asarray([e["v"] for e in ba], dtype=np.float64)
-                    mat_b = np.asarray([e["v"] for e in bb], dtype=np.float64)
-                    cos = np.round(mat_a @ mat_b.T, rd)
-                    mask = cos >= thr
-                    if blk_b == blk_q:
-                        mask &= ids_a[:, None] < ids_b[None, :]
-                    ii, jj = np.nonzero(mask)
-                    if not len(ii):
-                        continue
-                    ia, ib = ids_a[ii], ids_b[jj]
-                    # np.where, not np.minimum/maximum: the min/max
-                    # ufuncs have no string loops on numpy 1.x, and
-                    # id_dt is derived generically so string ids are
-                    # in-contract ('<' comparisons do support strings)
-                    lo = np.where(ia < ib, ia, ib)
-                    hi = np.where(ia < ib, ib, ia)
-                    parts.append(pd.DataFrame({"id_a": lo, "id_b": hi}))
-                if parts:
-                    yield pd.concat(parts, ignore_index=True)
-
-        pairs = joined.mapInPandas(_score, f"id_a {id_dt}, id_b {id_dt}")
-        return norm, pairs
-    left = norm.select(
-        F.col("__i").alias("id_a"), F.col("__v").alias("__va"), "__c"
-    )
-    right = norm.select(
-        F.col("__i").alias("id_b"), F.col("__v").alias("__vb"), "__c"
-    )
-    cos = F.round(
-        F.aggregate(
-            F.zip_with(F.col("__va"), F.col("__vb"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        sim_digits,
-    )
-    pairs = (
-        left.join(right, "__c")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("__cos", cos)
-        .filter(F.col("__cos") >= threshold)
-        .select("id_a", "id_b")
-    )
+    pairs = joined.mapInPandas(_score, f"id_a {id_dt}, id_b {id_dt}")
     return norm, pairs
 
 
@@ -960,9 +755,7 @@ def semantic_pairs(
     salt: str = "sem",
     round_digits: int = 9,
     sim_digits: int = 6,
-    pair_strategy: str = "gemm",
     block_size: int = 4096,
-    assign_strategy: str = "arrow",
 ) -> DataFrame:
     """Just the (id_a, id_b) semantic near-duplicate edges — for
     composing with other pair generators (e.g. an ensemble dedup that
@@ -970,7 +763,7 @@ def semantic_pairs(
     resolution)."""
     _, pairs = _assigned_and_pairs(
         df, id_col, vec_col, k, iters, threshold, salt, round_digits,
-        sim_digits, pair_strategy, block_size, assign_strategy,
+        sim_digits, block_size,
     )
     return pairs
 
@@ -993,7 +786,6 @@ def incremental_semantic_near_duplicates(
     threshold: float = 0.95,
     round_digits: int = 9,
     sim_digits: int = 6,
-    assign_strategy: str = "arrow",
     validate_new_ids: bool = False,
 ) -> "tuple[DataFrame, DataFrame]":
     """Ingest-time SEMANTIC dedup against a persisted embedding index
@@ -1047,8 +839,6 @@ def incremental_semantic_near_duplicates(
             " model (ann_index.load_centroids); an empty model would"
             " assign nothing and silently admit everything"
         )
-    if assign_strategy not in ("arrow", "hof"):
-        raise ValueError(f"unknown assign_strategy {assign_strategy!r}")
     if validate_new_ids:
         dup_ids = (
             new_vecs.select(F.col(id_col))
@@ -1072,12 +862,7 @@ def incremental_semantic_near_duplicates(
     base = new_vecs.select(
         F.col(id_col), _norm_checked(vec_col).alias("__v")
     )
-    if assign_strategy == "arrow":
-        assigned = _assign_arrow(base, "__v", centroids, round_digits)
-    else:
-        assigned = base.withColumn(
-            "__c", _nearest(F.col("__v"), centroids, round_digits)
-        )
+    assigned = _assign_arrow(base, "__v", centroids, round_digits)
     new_rows = assigned.select(
         F.col(id_col),
         F.col("__c").alias("cluster"),
@@ -1135,9 +920,7 @@ def semantic_dedup(
     salt: str = "sem",
     round_digits: int = 9,
     sim_digits: int = 6,
-    pair_strategy: str = "gemm",
     block_size: int = 4096,
-    assign_strategy: str = "arrow",
 ) -> DataFrame:
     """(id_col, cluster, component, is_canonical) — the SemDeDup
     pipeline: deterministic k-means, within-cluster cosine pairs at
@@ -1153,7 +936,7 @@ def semantic_dedup(
 
     norm, pairs = _assigned_and_pairs(
         df, id_col, vec_col, k, iters, threshold, salt, round_digits,
-        sim_digits, pair_strategy, block_size, assign_strategy,
+        sim_digits, block_size,
     )
     out = assign_components(
         norm.select(F.col("__i").alias(id_col), F.col("__c").alias("cluster")),

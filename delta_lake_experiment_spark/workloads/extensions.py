@@ -1081,20 +1081,9 @@ def near_dup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is a valid oracle. (The former standalone ``doc_simhash``
     signature query is consolidated into this one — the signature CTE
     of the oracle below value-checks the same md5-derived bits, and
-    ``simhash_signature`` strategies are pytest-proven bit-identical —
-    keeping every oracled query inside the driver's 50-row
-    CORRECTNESS window.)"""
+    ``simhash_signature`` is pytest-checked bit-for-bit against a
+    pure-Python md5-majority reference.)"""
     docs = load_table(spark, sf_dir, "documents")
-    # r17 adjudication of the r16 "agg" flip (VERDICT r16 item 6):
-    # interleaved COLD A/B (fresh session per run, 5 rounds, order
-    # alternated) puts fold at median 9.7 s vs agg 10.7 s — agg's
-    # extra codegen compile is NOT recovered on a cold JVM, which is
-    # the driver's PERF condition; warm in-session the two are equal
-    # within noise (agg 3.5-4.8 s vs fold 3.7-6.8 s) once agg's
-    # first-run compile (~13 s) is paid. Reverted to the default
-    # "fold" per the keep-only-if->=10%-better-cold rule; "agg"
-    # remains the documented choice for long-lived sessions where the
-    # one-time compile amortizes (both pytest-proven bit-identical).
     return simhash_near_duplicates(
         docs, "doc_id", "text", bits=60, num_bands=4, max_hamming=3,
     )

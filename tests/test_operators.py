@@ -161,6 +161,14 @@ def test_simhash_properties(spark):
     assert got[(1, 2)] == 0
     assert (1, 4) not in got and (2, 4) not in got
 
+    # argument checks are ValueErrors, not asserts (still enforced
+    # under python -O): a 64-bit signature overflows the 60-bit token
+    # hash, and max_hamming >= num_bands breaks pigeonhole exactness
+    with pytest.raises(ValueError, match="bits"):
+        simhash_signature(docs, "doc_id", "text", bits=64)
+    with pytest.raises(ValueError, match="max_hamming"):
+        simhash_near_duplicates(docs, "doc_id", "text", num_bands=4, max_hamming=4)
+
 
 def test_simhash_banding_is_exact(spark):
     """The banded join must find exactly the brute-force hamming<=3 set."""
@@ -558,16 +566,29 @@ def test_interval_join_bucketized(spark):
         )
 
 
-def test_simhash_strategies_bit_identical(spark):
-    """The codegen 'agg' strategy must produce byte-for-byte the same
-    signatures as the zero-shuffle 'fold' strategy."""
+def test_simhash_signature_matches_python_reference(spark):
+    """simhash_signature equals a pure-Python md5-majority SimHash bit
+    for bit: distinct lowercase tokens of the space-trimmed text split
+    on ASCII whitespace runs (Spark's trim and regex split), token
+    hash = first 15 hex digits of md5, bit j set on a strict majority
+    of the token hashes."""
+    import hashlib
+    import re
+
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    fold = {r["__id"]: r["simhash"] for r in simhash_signature(docs, "doc_id", "text").collect()}
-    agg = {
-        r["__id"]: r["simhash"]
-        for r in simhash_signature(docs, "doc_id", "text", strategy="agg").collect()
-    }
-    assert fold == agg and len(fold) == docs.count()
+
+    def simhash(text, bits=60):
+        toks = set(re.split(r"[ \t\n\x0b\f\r]+", text.lower().strip(" ")))
+        hs = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) for t in toks]
+        return sum(
+            1 << j
+            for j in range(bits)
+            if 2 * sum((h >> j) & 1 for h in hs) > len(hs)
+        )
+
+    ref = {r["doc_id"]: simhash(r["text"]) for r in docs.select("doc_id", "text").collect()}
+    got = {r["__id"]: r["simhash"] for r in simhash_signature(docs, "doc_id", "text").collect()}
+    assert got == ref and len(got) == docs.count()
 
 
 # ---------------------------------------------------------------------------
@@ -4030,14 +4051,6 @@ def test_hashed_logreg_training_parity_and_separation(spark):
     w, b = train_hashed_logreg(
         df, "doc_id", "text", "y", dim=dim, iters=iters, lr=lr, round_digits=rd
     )
-    # the constant-plan Arrow gradient (default) and the flat JVM
-    # aggregation land on the SAME rounded trajectory (the softmax
-    # lane's parity pin, binary form — r16 optimization round)
-    w_agg, b_agg = train_hashed_logreg(
-        df, "doc_id", "text", "y", dim=dim, iters=iters, lr=lr,
-        round_digits=rd, grad_strategy="agg",
-    )
-    assert w == w_agg and b == b_agg
 
     # pure-Python reference model
     def bucket(tok):
@@ -4148,14 +4161,6 @@ def test_train_hashed_softmax_planted_languages(spark):
         df, "doc_id", "text", "lang", classes,
         dim=dim, iters=iters, lr=lr, round_digits=rd,
     )
-    # the JVM flat-aggregation gradient lands on the same rounded
-    # trajectory as the default Arrow pass (summation-order noise is
-    # absorbed by the 1e-9 update grid)
-    w_agg, b_agg = train_hashed_softmax(
-        df, "doc_id", "text", "lang", classes,
-        dim=dim, iters=iters, lr=lr, round_digits=rd, grad_strategy="agg",
-    )
-    assert (w, b) == (w_agg, b_agg)
 
     # pure-Python reference (explicit class-order denominator fold)
     def bucket(tok):
@@ -4287,11 +4292,6 @@ def test_hashed_softmax_guards(spark):
     with pytest.raises(ValueError, match="iters"):
         train_hashed_softmax(
             df, "doc_id", "text", "lang", ("en", "fr"), dim=8, iters=0
-        )
-    with pytest.raises(ValueError, match="grad_strategy"):
-        train_hashed_softmax(
-            df, "doc_id", "text", "lang", ("en", "fr"), dim=8, iters=1,
-            grad_strategy="x",
         )
     with pytest.raises(ValueError, match="lengths"):
         score_hashed_softmax(
@@ -4677,13 +4677,17 @@ def test_bigram_logprob_scores(spark):
 def test_assign_to_centroids_matches_kmeans_assignments(spark):
     """The factored-out assignment (held-model path the ANN recall
     report uses) is value-identical to kmeans_assignments' train+assign
-    on the same inputs, in both strategies."""
+    on the same inputs, and both equal the DuckDB oracle's ``sfinal``
+    (semantic_pair_ctes) cluster assignment."""
     import random
+
+    import duckdb
 
     from delta_lake_experiment_spark.operators.semdedup import (
         assign_to_centroids,
         deterministic_kmeans,
         kmeans_assignments,
+        semantic_pair_ctes,
     )
 
     rng = random.Random(11)
@@ -4698,16 +4702,20 @@ def test_assign_to_centroids_matches_kmeans_assignments(spark):
         ).collect()
     }
     cents = deterministic_kmeans(df, "vec_id", "embedding", k=4, iters=2, salt="aa")
-    for strat in ("arrow", "hof"):
-        got = {
-            r["vec_id"]: r["cluster"]
-            for r in assign_to_centroids(
-                df, "vec_id", "embedding", cents, assign_strategy=strat
-            ).collect()
-        }
-        assert got == ref, strat
-    with pytest.raises(ValueError, match="assign_strategy"):
-        assign_to_centroids(df, "vec_id", "embedding", cents, assign_strategy="x")
+    got = {
+        r["vec_id"]: r["cluster"]
+        for r in assign_to_centroids(df, "vec_id", "embedding", cents).collect()
+    }
+    assert got == ref and len(ref) == len(rows)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE kemb (vec_id INT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO kemb VALUES (?, ?)", rows)
+    chain = semantic_pair_ctes(
+        "kemb", "vec_id", "embedding", k=4, iters=2, salt="aa"
+    )
+    duck = dict(con.execute("WITH " + chain + "\nSELECT i, j FROM sfinal").fetchall())
+    con.close()
+    assert duck == ref
 
 
 @pytest.mark.slow
@@ -4734,9 +4742,9 @@ def test_ann_recall_report_invariants(spark):
 
 def test_deterministic_pq_codebooks_cross_engine(spark):
     """The certified euclidean PQ trainer: Spark's one-seed-collect +
-    fused Arrow assignment, the hof expression path, and the DuckDB
-    flat s-keyed chain all land on IDENTICAL codebooks and codes; a
-    planted two-cluster-per-subspace geometry is recovered."""
+    fused Arrow assignment and the DuckDB flat s-keyed chain land on
+    IDENTICAL codebooks and codes; a planted two-cluster-per-subspace
+    geometry is recovered."""
     import random
 
     import duckdb
@@ -4764,11 +4772,6 @@ def test_deterministic_pq_codebooks_cross_engine(spark):
     books = deterministic_pq_codebooks(
         df, "vec_id", "embedding", m=m, k=k, iters=iters, salt="tpq"
     )
-    books_hof = deterministic_pq_codebooks(
-        df, "vec_id", "embedding", m=m, k=k, iters=iters, salt="tpq",
-        assign_strategy="hof",
-    )
-    assert books == books_hof
     # planted structure recovered: each subspace's two codewords sit
     # near ±1 on its structured coordinate
     for s, pos in ((0, 0), (1, 0)):
@@ -4803,6 +4806,27 @@ def test_deterministic_pq_codebooks_cross_engine(spark):
     assert all(
         (dcodes[i][0], dcodes[i][1]) == codes[i] for i, _ in rows
     )
+    # codewords of UNEQUAL norm, so the ``- cc`` self-dot term decides
+    # codes (the planted ±1 books above have equal norms): codes equal
+    # a brute-force squared-distance argmin
+    book = [[0.0, 0.0], [3.0, 0.0], [0.0, -2.0]]
+    pts = [
+        (i, [round(rng.uniform(-3, 3), 6), round(rng.uniform(-3, 3), 6)])
+        for i in range(40)
+    ]
+    got = {
+        r["i"]: r["__c0"]
+        for r in pq_assign_codes(
+            spark.createDataFrame(pts, "i int, v array<double>"), "v", [book], 9
+        ).collect()
+    }
+    assert got == {
+        i: min(
+            range(len(book)),
+            key=lambda j: sum((a - b) ** 2 for a, b in zip(v, book[j])),
+        )
+        for i, v in pts
+    }
     with pytest.raises(ValueError, match="m="):
         deterministic_pq_codebooks(df, "vec_id", "embedding", m=0)
     with pytest.raises(ValueError, match="divisible"):
@@ -4854,52 +4878,46 @@ def test_deterministic_kmeans_empty_cluster_carryover(spark):
 
 
 @pytest.mark.slow
-def test_semantic_pair_strategies_agree(spark):
-    """gemm (BLAS per-cluster bundle) and hof (JVM fold join) produce
-    the identical pair set at the rounding grid on the fixture corpus."""
-    from delta_lake_experiment_spark.operators.semdedup import semantic_pairs
+def test_semantic_pairs_match_duckdb(spark):
+    """semantic_pairs (BLAS per-cluster bundles) produces exactly the
+    DuckDB oracle's ``sem_pairs`` (semantic_pair_ctes, same k / iters /
+    threshold / salt) at the rounding grid on the fixture corpus."""
+    import duckdb
 
+    from delta_lake_experiment_spark.operators.semdedup import (
+        semantic_pair_ctes,
+        semantic_pairs,
+    )
     from delta_lake_experiment_spark.sources.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     kw = dict(k=8, iters=2, threshold=0.35, salt="sem1")
     g = {(r["id_a"], r["id_b"]) for r in
-         semantic_pairs(emb, "vec_id", "embedding", pair_strategy="gemm", **kw).collect()}
-    h = {(r["id_a"], r["id_b"]) for r in
-         semantic_pairs(emb, "vec_id", "embedding", pair_strategy="hof", **kw).collect()}
-    assert g == h and len(g) > 0
+         semantic_pairs(emb, "vec_id", "embedding", **kw).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE semb (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany(
+        "INSERT INTO semb VALUES (?, ?)",
+        [(r["vec_id"], list(r["embedding"]))
+         for r in emb.select("vec_id", "embedding").collect()],
+    )
+    d = set(con.execute(
+        "WITH " + semantic_pair_ctes("semb", "vec_id", "embedding", **kw)
+        + "\nSELECT id_a, id_b FROM sem_pairs"
+    ).fetchall())
+    con.close()
+    assert g == d and len(g) > 0
     # block_size small enough to force multi-tile clusters on the
     # fixture (500 vecs / k=8 -> ~60-vec clusters tiled into ~4 blocks
     # each): the tiled sub-block pair join must yield the identical
     # pair set as the single-tile path (the embedding_near_duplicates
     # tiled==untiled precedent, here within k-means clusters).
     t = {(r["id_a"], r["id_b"]) for r in
-         semantic_pairs(emb, "vec_id", "embedding", pair_strategy="gemm",
-                        block_size=16, **kw).collect()}
+         semantic_pairs(emb, "vec_id", "embedding", block_size=16,
+                        **kw).collect()}
     assert t == g
-    # Arrow assignment fast path == JVM HOF expression (exact fold
-    # order + oracle-replicated rounding on the Arrow side)
-    from delta_lake_experiment_spark.operators.semdedup import (
-        kmeans_assignments,
-    )
-
-    aa = {(r["vec_id"], r["cluster"]) for r in
-          kmeans_assignments(emb, "vec_id", "embedding", k=8, iters=2,
-                             salt="sem1", assign_strategy="arrow").collect()}
-    hh = {(r["vec_id"], r["cluster"]) for r in
-          kmeans_assignments(emb, "vec_id", "embedding", k=8, iters=2,
-                             salt="sem1", assign_strategy="hof").collect()}
-    assert aa == hh and len(aa) == emb.count()
-    ph = {(r["id_a"], r["id_b"]) for r in
-          semantic_pairs(emb, "vec_id", "embedding", assign_strategy="hof",
-                         **kw).collect()}
-    assert ph == g
-    with pytest.raises(ValueError, match="pair_strategy"):
-        semantic_pairs(emb, "vec_id", "embedding", pair_strategy="x", **kw)
     with pytest.raises(ValueError, match="block_size"):
         semantic_pairs(emb, "vec_id", "embedding", block_size=0, **kw)
-    with pytest.raises(ValueError, match="assign_strategy"):
-        semantic_pairs(emb, "vec_id", "embedding", assign_strategy="x", **kw)
     # STRING ids through the gemm scorer (id_dt is schema-derived, so
     # strings are in-contract; np.minimum/maximum have no string loops
     # on numpy 1.x — the np.where regression this pins against)
@@ -5506,13 +5524,14 @@ def test_pair_collect_cap_loud(spark):
 
 
 @pytest.mark.slow
-def test_ppmi_matvec_strategy_parity(spark):
-    """The r17 Arrow matvec (closure iterate, partitioned+sorted
-    matrix) and the legacy literal-fold matvec produce IDENTICAL
+def test_ppmi_matvec_tier_parity(spark, monkeypatch):
+    """The distributed Arrow matvec (closure iterate, partitioned+sorted
+    matrix) and the driver-side local matvec produce IDENTICAL
     eigendecompositions — both run the same ascending-j sequential
     fold, so the pinned trajectory is bit-equal, not merely close."""
     import random
 
+    from delta_lake_experiment_spark.operators import embeddings
     from delta_lake_experiment_spark.operators.embeddings import (
         cooccurrence_counts,
         ppmi_matrix,
@@ -5530,19 +5549,12 @@ def test_ppmi_matvec_strategy_parity(spark):
     toks = tokenize_positions(df, "doc_id", "text")
     vocab = vocab_ids(toks)
     mat = ppmi_matrix(cooccurrence_counts(toks, vocab, window=2))
-    eig_fold = ppmi_topk_eigs(
-        mat, len(vocab), r=2, p_iters=4, matvec_strategy="fold"
-    )
-    eig_arrow = ppmi_topk_eigs(
-        mat, len(vocab), r=2, p_iters=4, matvec_strategy="arrow"
-    )
-    eig_local = ppmi_topk_eigs(
-        mat, len(vocab), r=2, p_iters=4, matvec_strategy="local"
-    )
-    assert eig_fold == eig_arrow == eig_local
+    # 12 words: the default threshold picks the local tier
+    eig_local = ppmi_topk_eigs(mat, len(vocab), r=2, p_iters=4)
+    monkeypatch.setattr(embeddings, "_MATVEC_ARROW_MIN_V", 0)
+    eig_arrow = ppmi_topk_eigs(mat, len(vocab), r=2, p_iters=4)
+    assert eig_arrow == eig_local
     spark.catalog.clearCache()
-    with pytest.raises(ValueError, match="matvec_strategy"):
-        ppmi_topk_eigs(mat, len(vocab), r=1, matvec_strategy="bogus")
 
 
 def test_verified_near_duplicates_two_stage(spark):
