@@ -1905,32 +1905,15 @@ actions.DropTable` for why clearing the live set on fold is
         per-table declaration. Authoritative records REPLACE the
         table's declarations wholesale, so any emitter that forgot one
         map would silently CLEAR it on replay — every emitter funnels
-        here and overrides only what its operation changes; a new
-        per-table metadata field added to this helper is then carried
-        by all of them automatically."""
-        spec = snap.bucket_specs.get(table)
-        base = dict(
+        here and overrides only what its operation changes; a
+        declaration added to ``plans.actions.DECLARATIONS`` is then
+        carried by all of them automatically."""
+        return ChangeMetadata(
             table=table,
             schema_ddl=schema_ddl,
-            primary_keys=list(snap.pkeys.get(table, [])),
-            bloom_columns=list(snap.bloom_cols.get(table, [])),
-            cluster_by=list(snap.cluster_cols.get(table, [])),
-            bucket_by=list(spec["cols"]) if spec else [],
-            bucket_count=int(spec["n"]) if spec else 0,
-            checks=dict(snap.checks.get(table, {})),
-            column_map=dict(snap.col_maps.get(table, {})),
-            retired_phys=list(snap.retired.get(table, [])),
-            col_defaults={
-                c: dict(v) for c, v in snap.defaults.get(table, {}).items()
-            },
-            generated=dict(snap.generated.get(table, {})),
-            identity={
-                c: dict(v) for c, v in snap.identity.get(table, {}).items()
-            },
             authoritative=True,
+            **{**snap.declarations(table), **overrides},
         )
-        base.update(overrides)
-        return ChangeMetadata(**base)
 
     def _expr_references(
         self, schema: T.StructType, expr: str, column: str
@@ -4692,16 +4675,7 @@ actions.DropTable` for why clearing the live set on fold is
         # later declarations instead of silently keeping them.
         if (
             cur.tables.get(table) != old.tables[table]
-            or cur.pkeys.get(table, []) != old.pkeys.get(table, [])
-            or cur.bloom_cols.get(table, []) != old.bloom_cols.get(table, [])
-            or cur.cluster_cols.get(table, []) != old.cluster_cols.get(table, [])
-            or cur.bucket_specs.get(table) != old.bucket_specs.get(table)
-            or cur.checks.get(table, {}) != old.checks.get(table, {})
-            or cur.col_maps.get(table, {}) != old.col_maps.get(table, {})
-            or cur.retired.get(table, []) != old.retired.get(table, [])
-            or cur.defaults.get(table, {}) != old.defaults.get(table, {})
-            or cur.generated.get(table, {}) != old.generated.get(table, {})
-            or cur.identity.get(table, {}) != old.identity.get(table, {})
+            or cur.declarations(table) != old.declarations(table)
         ):
             # the HISTORICAL declarations restore wholesale (renames /
             # drops / defaults made after the target version roll back
@@ -5499,42 +5473,7 @@ actions.DropTable` for why clearing the live set on fold is
     def _effective_snapshot(self, tx: _Tx) -> Snapshot:
         """Snapshot + this tx's own actions (deletes/writes visible to
         self immediately, to others only after commit)."""
-        snap = Snapshot(version=tx.snapshot.version, tables=dict(tx.snapshot.tables))
-        # copy only MATERIALIZED tables; lazy (format-3 sidecar) tables
-        # share the hydration cache by reference and load on first touch
-        snap.live = {t: dict(objs) for t, objs in tx.snapshot.live.items()}
-        snap._lazy = tx.snapshot._lazy
-        snap.dvs = {
-            t: {o: list(names) for o, names in objs.items()}
-            for t, objs in tx.snapshot.dvs.items()
-        }
-        snap.pkeys = {t: list(ks) for t, ks in tx.snapshot.pkeys.items()}
-        snap.bloom_cols = {t: list(cs) for t, cs in tx.snapshot.bloom_cols.items()}
-        snap.cluster_cols = {t: list(cs) for t, cs in tx.snapshot.cluster_cols.items()}
-        snap.bucket_specs = {
-            t: {"cols": list(s["cols"]), "n": int(s["n"])}
-            for t, s in tx.snapshot.bucket_specs.items()
-        }
-        snap.checks = {t: dict(cs) for t, cs in tx.snapshot.checks.items()}
-        snap.col_maps = {t: dict(m) for t, m in tx.snapshot.col_maps.items()}
-        snap.retired = {t: list(r) for t, r in tx.snapshot.retired.items()}
-        snap.defaults = {
-            t: {c: dict(v) for c, v in m.items()}
-            for t, m in tx.snapshot.defaults.items()
-        }
-        snap.generated = {
-            t: dict(m) for t, m in tx.snapshot.generated.items()
-        }
-        snap.identity = {
-            t: {c: dict(v) for c, v in m.items()}
-            for t, m in tx.snapshot.identity.items()
-        }
-        snap.last_ts = tx.snapshot.last_ts
-        snap.born = dict(tx.snapshot.born)
-        snap.protocol = {
-            "rf": list(tx.snapshot.protocol["rf"]),
-            "wf": list(tx.snapshot.protocol["wf"]),
-        }
+        snap = tx.snapshot.copy()
         snap.apply(tx.id, tx.actions)
         snap.tables.update(tx.new_tables)
         return snap

@@ -81,6 +81,24 @@ class AddDataObject:
             out["rw"] = True
         return {"add": out}
 
+    @classmethod
+    def from_json(cls, a: dict[str, Any]) -> "AddDataObject":
+        """Inverse of :meth:`to_json`'s inner dict — the one parser of
+        that shape (log records and inline checkpoint live lists)."""
+        return cls(
+            name=a["name"],
+            table=a["table"],
+            tx_id=int(a["tx_id"]),
+            num_rows=int(a.get("num_rows", 0)),
+            size=int(a.get("size", 0)),
+            stats=a.get("stats", {}),
+            blooms=a.get("blooms", {}),
+            bucket_id=(
+                int(a["bucket_id"]) if a.get("bucket_id") is not None else None
+            ),
+            rewrite=bool(a.get("rw", False)),
+        )
+
 
 @dataclass
 class RemoveDataObject:
@@ -193,32 +211,43 @@ class ChangeMetadata:
 
     def to_json(self) -> dict[str, Any]:
         out: dict[str, Any] = {"table": self.table, "schema_ddl": self.schema_ddl}
-        if self.primary_keys:
-            out["primary_keys"] = self.primary_keys
-        if self.bloom_columns:
-            out["bloom_columns"] = self.bloom_columns
-        if self.cluster_by:
-            out["cluster_by"] = self.cluster_by
+        for f, _, _ in DECLARATIONS:
+            if getattr(self, f):
+                out[f] = getattr(self, f)
         if self.bucket_by:
             out["bucket_by"] = self.bucket_by
             out["bucket_count"] = self.bucket_count
-        if self.checks:
-            out["checks"] = self.checks
-        if self.column_map:
-            out["column_map"] = self.column_map
-        if self.retired_phys:
-            out["retired_phys"] = self.retired_phys
-        if self.col_defaults:
-            out["col_defaults"] = self.col_defaults
-        if self.generated:
-            out["generated"] = self.generated
-        if self.identity:
-            out["identity"] = self.identity
         if self.ident_only:
             out["io"] = True
         if self.authoritative:
             out["authoritative"] = True
         return {"metadata": out}
+
+
+def _copy_nested(m: dict[str, dict]) -> dict[str, dict]:
+    return {k: dict(v) for k, v in m.items()}
+
+
+# The per-table declarations a ChangeMetadata carries, each named once
+# as (ChangeMetadata field, Snapshot map = checkpoint key, copy). Every
+# hop — log record, fold, checkpoint, tx view, authoritative re-emit,
+# RESTORE — iterates this table, so a new declaration is one field on
+# each class plus one row here. Each copy maps ``{}`` to the empty
+# value, which is how an absent declaration reads. Bucketing stays
+# outside: ``bucket_by`` + ``bucket_count`` fold into ONE
+# ``Snapshot.bucket_specs`` entry, popped when an authoritative record
+# declares none.
+DECLARATIONS: tuple[tuple[str, str, Any], ...] = (
+    ("primary_keys", "pkeys", list),
+    ("bloom_columns", "bloom_cols", list),
+    ("cluster_by", "cluster_cols", list),
+    ("checks", "checks", dict),
+    ("column_map", "col_maps", dict),
+    ("retired_phys", "retired", list),
+    ("col_defaults", "defaults", _copy_nested),
+    ("generated", "generated", dict),
+    ("identity", "identity", _copy_nested),
+)
 
 
 @dataclass
@@ -325,20 +354,7 @@ Action = (
 
 def action_from_json(obj: dict[str, Any]) -> Action:
     if "add" in obj:
-        a = obj["add"]
-        return AddDataObject(
-            name=a["name"],
-            table=a["table"],
-            tx_id=int(a["tx_id"]),
-            num_rows=int(a.get("num_rows", 0)),
-            size=int(a.get("size", 0)),
-            stats=a.get("stats", {}),
-            blooms=a.get("blooms", {}),
-            bucket_id=(
-                int(a["bucket_id"]) if a.get("bucket_id") is not None else None
-            ),
-            rewrite=bool(a.get("rw", False)),
-        )
+        return AddDataObject.from_json(obj["add"])
     if "remove" in obj:
         r = obj["remove"]
         return RemoveDataObject(name=r["name"], table=r["table"], tx_id=int(r["tx_id"]))
@@ -347,19 +363,11 @@ def action_from_json(obj: dict[str, Any]) -> Action:
         return ChangeMetadata(
             table=m["table"],
             schema_ddl=m["schema_ddl"],
-            primary_keys=list(m.get("primary_keys", [])),
-            bloom_columns=list(m.get("bloom_columns", [])),
-            cluster_by=list(m.get("cluster_by", [])),
             bucket_by=list(m.get("bucket_by", [])),
             bucket_count=int(m.get("bucket_count", 0)),
-            checks=dict(m.get("checks", {})),
-            column_map=dict(m.get("column_map", {})),
-            retired_phys=list(m.get("retired_phys", [])),
-            col_defaults=dict(m.get("col_defaults", {})),
-            generated=dict(m.get("generated", {})),
-            identity={c: dict(v) for c, v in m.get("identity", {}).items()},
             ident_only=bool(m.get("io", False)),
             authoritative=bool(m.get("authoritative", False)),
+            **{f: copy(m.get(f, {})) for f, _, copy in DECLARATIONS},
         )
     if "protocol" in obj:
         p = obj["protocol"]

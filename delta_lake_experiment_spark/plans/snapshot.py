@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 from typing import Any, Optional
 
 from delta_lake_experiment_spark.plans.actions import (
+    DECLARATIONS,
     Action,
     AddDataObject,
     AddDeletionVector,
@@ -240,6 +241,54 @@ class Snapshot:
         default=None, repr=False, compare=False
     )
 
+    def copy(self) -> "Snapshot":
+        """A copy whose folds never reach this snapshot (a tx's view
+        applies its own actions to it): every container is copied one
+        level per shape. AddDataObjects are shared — folds replace
+        them, never mutate them — and so is ``_lazy``, whose cache
+        :meth:`_ensure` copies before any mutation."""
+        snap = Snapshot(
+            version=self.version,
+            tables=dict(self.tables),
+            # only MATERIALIZED tables; lazy ones load on first touch
+            live={t: dict(objs) for t, objs in self.live.items()},
+            dvs={
+                t: {o: list(names) for o, names in objs.items()}
+                for t, objs in self.dvs.items()
+            },
+            bucket_specs={
+                t: {"cols": list(s["cols"]), "n": int(s["n"])}
+                for t, s in self.bucket_specs.items()
+            },
+            txns=dict(self.txns),
+            born=dict(self.born),
+            protocol={
+                "rf": list(self.protocol["rf"]),
+                "wf": list(self.protocol["wf"]),
+            },
+            last_ts=self.last_ts,
+            _lazy=self._lazy,
+        )
+        for _, attr, copy in DECLARATIONS:
+            decl = getattr(self, attr)
+            if decl:  # an empty map keeps the fresh default
+                setattr(snap, attr, {t: copy(v) for t, v in decl.items()})
+        return snap
+
+    def declarations(self, table: str) -> dict[str, Any]:
+        """Every declaration of ``table`` as complete ChangeMetadata
+        kwargs (bucketing included), each detached from this snapshot;
+        an absent declaration reads as its empty value."""
+        spec = self.bucket_specs.get(table)
+        return {
+            "bucket_by": list(spec["cols"]) if spec else [],
+            "bucket_count": int(spec["n"]) if spec else 0,
+            **{
+                f: copy(getattr(self, attr).get(table, {}))
+                for f, attr, copy in DECLARATIONS
+            },
+        }
+
     def _ensure(self, table: str) -> None:
         """Hydrate ``table``'s live list from its checkpoint sidecar
         parts on first touch (no-op when materialized or not lazy).
@@ -327,57 +376,22 @@ class Snapshot:
                 if act.table not in self.tables:
                     self.born[act.table] = tx_id  # lineage begins here
                 self.tables[act.table] = act.schema_ddl  # last-writer-wins
-                if act.authoritative:
-                    # RESTORE/ALTER: lists replace outright — empty
-                    # lists CLEAR prior declarations
-                    self.pkeys[act.table] = list(act.primary_keys)
-                    self.bloom_cols[act.table] = list(act.bloom_columns)
-                    self.cluster_cols[act.table] = list(act.cluster_by)
-                    self.checks[act.table] = dict(act.checks)
-                    # authoritative: empty map = identity (ALTER/RESTORE
-                    # carry the current/historical map explicitly)
-                    self.col_maps[act.table] = dict(act.column_map)
-                    self.retired[act.table] = list(act.retired_phys)
-                    self.defaults[act.table] = dict(act.col_defaults)
-                    self.generated[act.table] = dict(act.generated)
-                    self.identity[act.table] = {
-                        c: dict(v) for c, v in act.identity.items()
+                # authoritative records (RESTORE/ALTER) REPLACE every
+                # declaration — empty values CLEAR prior ones (an empty
+                # column map = identity); other records set only the
+                # declarations they carry (a mapping-changing record
+                # carries the FULL map; empty = no info in this record)
+                for f, attr, copy in DECLARATIONS:
+                    v = getattr(act, f)
+                    if v or act.authoritative:
+                        getattr(self, attr)[act.table] = copy(v)
+                if act.bucket_by:
+                    self.bucket_specs[act.table] = {
+                        "cols": list(act.bucket_by),
+                        "n": int(act.bucket_count),
                     }
-                    if act.bucket_by:
-                        self.bucket_specs[act.table] = {
-                            "cols": list(act.bucket_by),
-                            "n": int(act.bucket_count),
-                        }
-                    else:
-                        self.bucket_specs.pop(act.table, None)
-                else:
-                    if act.primary_keys:
-                        self.pkeys[act.table] = list(act.primary_keys)
-                    if act.bloom_columns:
-                        self.bloom_cols[act.table] = list(act.bloom_columns)
-                    if act.cluster_by:
-                        self.cluster_cols[act.table] = list(act.cluster_by)
-                    if act.bucket_by:
-                        self.bucket_specs[act.table] = {
-                            "cols": list(act.bucket_by),
-                            "n": int(act.bucket_count),
-                        }
-                    if act.checks:
-                        self.checks[act.table] = dict(act.checks)
-                    # mapping-changing records carry the FULL map;
-                    # empty = no mapping info in this record
-                    if act.column_map:
-                        self.col_maps[act.table] = dict(act.column_map)
-                    if act.retired_phys:
-                        self.retired[act.table] = list(act.retired_phys)
-                    if act.col_defaults:
-                        self.defaults[act.table] = dict(act.col_defaults)
-                    if act.generated:
-                        self.generated[act.table] = dict(act.generated)
-                    if act.identity:
-                        self.identity[act.table] = {
-                            c: dict(v) for c, v in act.identity.items()
-                        }
+                elif act.authoritative:
+                    self.bucket_specs.pop(act.table, None)
             elif isinstance(act, AddDataObject):
                 # hydrate-before-mutate: folding into an unhydrated
                 # table would otherwise mark it materialized with ONLY
@@ -410,16 +424,9 @@ class Snapshot:
                 self.tables.pop(act.table, None)
                 self.born.pop(act.table, None)
                 self.dvs.pop(act.table, None)
-                self.pkeys.pop(act.table, None)
-                self.bloom_cols.pop(act.table, None)
-                self.cluster_cols.pop(act.table, None)
                 self.bucket_specs.pop(act.table, None)
-                self.checks.pop(act.table, None)
-                self.col_maps.pop(act.table, None)
-                self.retired.pop(act.table, None)
-                self.defaults.pop(act.table, None)
-                self.generated.pop(act.table, None)
-                self.identity.pop(act.table, None)
+                for _, attr, _ in DECLARATIONS:
+                    getattr(self, attr).pop(act.table, None)
             elif isinstance(act, Protocol):
                 # monotone union (order-independent: concurrent
                 # upgrades reconcile without conflict), then gate —
@@ -448,16 +455,8 @@ class Snapshot:
             "version": self.version,
             "tables": self.tables,
             "dvs": self.dvs,
-            "pkeys": self.pkeys,
-            "bloom_cols": self.bloom_cols,
-            "cluster_cols": self.cluster_cols,
             "bucket_specs": self.bucket_specs,
-            "checks": self.checks,
-            "col_maps": self.col_maps,
-            "retired": self.retired,
-            "defaults": self.defaults,
-            "generated": self.generated,
-            "identity": self.identity,
+            **{attr: getattr(self, attr) for _, attr, _ in DECLARATIONS},
             # folded protocol features (omitted while empty so legacy
             # payloads stay byte-identical): a checkpoint CARRIES the
             # gate — readers check it before hydrating anything else
@@ -673,43 +672,20 @@ class Snapshot:
         return snap
 
     @classmethod
-    def from_json(cls, data: bytes) -> "Snapshot":
-        return cls.from_dict(json.loads(data))
-
-    @classmethod
     def from_dict(cls, d: dict) -> "Snapshot":
         snap = cls(version=int(d["version"]), tables=dict(d["tables"]))
         snap.dvs = {
             t: {o: list(names) for o, names in objs.items()}
             for t, objs in d.get("dvs", {}).items()
         }
-        snap.pkeys = {t: list(ks) for t, ks in d.get("pkeys", {}).items()}
-        snap.bloom_cols = {t: list(cs) for t, cs in d.get("bloom_cols", {}).items()}
-        snap.cluster_cols = {t: list(cs) for t, cs in d.get("cluster_cols", {}).items()}
         snap.bucket_specs = {
             t: {"cols": list(s["cols"]), "n": int(s["n"])}
             for t, s in d.get("bucket_specs", {}).items()
         }
-        snap.checks = {
-            t: {n: str(e) for n, e in cs.items()}
-            for t, cs in d.get("checks", {}).items()
-        }
-        snap.col_maps = {
-            t: {l: str(p) for l, p in m.items()}
-            for t, m in d.get("col_maps", {}).items()
-        }
-        snap.retired = {t: list(r) for t, r in d.get("retired", {}).items()}
-        snap.defaults = {
-            t: {c: dict(v) for c, v in m.items()}
-            for t, m in d.get("defaults", {}).items()
-        }
-        snap.generated = {
-            t: dict(m) for t, m in d.get("generated", {}).items()
-        }
-        snap.identity = {
-            t: {c: dict(v) for c, v in m.items()}
-            for t, m in d.get("identity", {}).items()
-        }
+        for _, attr, copy in DECLARATIONS:
+            setattr(
+                snap, attr, {t: copy(v) for t, v in d.get(attr, {}).items()}
+            )
         proto = d.get("protocol", {})
         snap.protocol = {
             "rf": sorted(set(proto.get("rf", []))),
@@ -723,25 +699,9 @@ class Snapshot:
         snap.txns = {a: int(b) for a, b in d.get("txns", {}).items()}
         snap.born = {t: int(v) for t, v in d.get("born", {}).items()}
         snap.last_ts = int(d.get("last_ts", 0))
+        parse = AddDataObject.from_json
         for t, objs in d["live"].items():
-            snap.live[t] = {
-                a["name"]: AddDataObject(
-                    name=a["name"],
-                    table=a["table"],
-                    tx_id=int(a["tx_id"]),
-                    num_rows=int(a.get("num_rows", 0)),
-                    size=int(a.get("size", 0)),
-                    stats=a.get("stats", {}),
-                    blooms=a.get("blooms", {}),
-                    bucket_id=(
-                        int(a["bucket_id"])
-                        if a.get("bucket_id") is not None
-                        else None
-                    ),
-                    rewrite=bool(a.get("rw", False)),
-                )
-                for a in objs
-            }
+            snap.live[t] = {a["name"]: parse(a) for a in objs}
         return snap
 
 

@@ -5,6 +5,8 @@ removed/masked files are disjoint from this tx's read+target sets
 to the retargeted version; genuine overlaps, metadata changes, and
 duplicate streaming batches still conflict first-committer-wins."""
 
+import copy
+import dataclasses
 import os
 import sys
 
@@ -15,6 +17,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from delta_lake_experiment_spark.client import TX_COL, DeltaLakeClient
 from delta_lake_experiment_spark.errors import ConcurrentCommitError
+from delta_lake_experiment_spark.plans.actions import DECLARATIONS
+from delta_lake_experiment_spark.plans.snapshot import Snapshot
 
 
 def _two_clients(spark, store_dir, ddl="k BIGINT, v STRING", rows=()):
@@ -158,6 +162,55 @@ def test_duplicate_streaming_batch_never_admits(spark, store_dir):
     c = DeltaLakeClient(spark, store_dir)
     c.new_tx()
     assert c.tx.snapshot.txns.get("app") == 7
+    c.abort_tx()
+
+
+def test_tx_view_carries_every_snapshot_field(spark, store_dir):
+    """The tx's own view (_effective_snapshot) starts as a copy of its
+    snapshot on EVERY field — the streaming txn markers included — and
+    folds into containers of its own."""
+    c = DeltaLakeClient(spark, store_dir, dataobject_size=100)
+    c.new_tx()
+    c.create_table(
+        "t",
+        "k BIGINT, v STRING, id BIGINT",
+        primary_keys=["k"],
+        checks={"k_pos": "k > 0"},
+        identity={"id": {"start": 1, "step": 1}},
+    )
+    c.write_row("t", [1, "a", None])
+    c.write_row("t", [2, "b", None])
+    c.commit_tx(txn=("app", 7))
+    c.new_tx()
+    c.add_columns("t", "d STRING DEFAULT 'x'")
+    c.delete_rows("t", "k", 1, 1, use_dv=True)
+    c.commit_tx()
+    c.new_tx()
+    base = c.tx.snapshot
+    assert base.txns == {"app": 7} and base.table_dvs("t")
+    view = c._effective_snapshot(c.tx)
+    for f in dataclasses.fields(Snapshot):
+        if f.name == "version":
+            # the view folds the tx (no actions yet) at its own id
+            assert view.version == c.tx.id == base.version + 1
+        elif f.name != "_lazy":
+            assert getattr(view, f.name) == getattr(base, f.name), f.name
+    before = copy.deepcopy(base)
+    view.txns["app"] = 8
+    for masks in view.dvs["t"].values():
+        masks.append("dv_x")
+    for _, attr, _ in DECLARATIONS:
+        decls = getattr(view, attr)
+        for decl in decls.values():
+            if isinstance(decl, list):
+                decl.append("x")
+                continue
+            for v in decl.values():
+                if isinstance(v, dict):
+                    v["x"] = 1
+            decl["x"] = "x"
+        decls["u"] = []
+    assert base == before
     c.abort_tx()
 
 

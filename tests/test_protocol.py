@@ -192,7 +192,7 @@ def test_legacy_log_without_protocol_keeps_working(tmp_path):
     snap = replay_log(c.store)
     assert snap.protocol == {"rf": [], "wf": []}
     # legacy checkpoint payload (no protocol / fmt keys) loads
-    legacy = Snapshot.from_json(snap.to_json())
+    legacy = Snapshot.from_checkpoint(snap.to_json(), c.store)
     assert legacy.tables == snap.tables
     c.new_tx()
     c.write_row("t", [2, 20])
