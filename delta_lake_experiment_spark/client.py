@@ -49,6 +49,7 @@ Scale design (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import dataclasses
 import datetime
@@ -98,14 +99,20 @@ from delta_lake_experiment_spark.plans.protocol import (
 )
 from delta_lake_experiment_spark.plans.snapshot import (
     CHECKPOINT_INTERVAL,
-    CHECKPOINT_PREFIX,
-    LOG_PREFIX,
     Snapshot,
     _stats_intersect,
     checkpoint_name,
+    checkpoint_parts,
+    checkpoint_refs,
+    checkpoint_versions,
+    encode_record,
     log_name,
+    log_versions,
     newest_checkpoint_version,
+    read_record,
+    records_newest_first,
     replay_log,
+    ts_micros,
     write_last_checkpoint,
 )
 from delta_lake_experiment_spark.storage.objectstore import LocalObjectStorage, ObjectStorage
@@ -327,27 +334,8 @@ class DeltaLakeClient:
             # on retry) — recorded stamps never regress
             floor_ts = tx.snapshot.last_ts
             while True:
-                payload: dict[str, Any] = {
-                    "id": attempt_id,
-                    # conflict-format version: >=2 means this commit's
-                    # add actions carry rewrite provenance ("rw"), so
-                    # reconciliation may trust an untagged add to be a
-                    # FRESH insert. Records without it predate the tag
-                    # and fall back to the commit-granular exemption.
-                    "cv": 2,
-                    # in-commit wall-clock (epoch micros): powers
-                    # TIMESTAMP AS OF resolution and DESCRIBE HISTORY.
-                    # Monotonic by construction (Delta's ICT:
-                    # max(now, prev + 1)) so a skewed writer's clock
-                    # never makes the ascending timestamp walks stop
-                    # early; ordering authority stays with the version.
-                    "ts": max(int(self._clock() * 1_000_000), floor_ts + 1),
-                    "actions": [a.to_json() for a in tx.actions],
-                }
-                if txn is not None:
-                    # idempotence marker for exactly-once streaming sinks
-                    payload["txn"] = {"app_id": txn[0], "batch": int(txn[1])}
-                record = json.dumps(payload).encode()
+                now_us = int(self._clock() * 1_000_000)
+                record = encode_record(attempt_id, tx.actions, now_us, floor_ts, txn)
                 try:
                     self.store.put_if_absent(log_name(attempt_id), record)
                     break
@@ -373,13 +361,8 @@ class DeltaLakeClient:
                     restamp: set[str] = set()
                     # anchored at the collided version: O(interleaved
                     # commits) listed keys, not the whole log prefix
-                    for name in self.store.list_prefix_ordered(
-                        LOG_PREFIX, start_after=log_name(attempt_id - 1)
-                    ):
-                        version = int(name[len(LOG_PREFIX):])
-                        if version < attempt_id:
-                            continue
-                        interleaved = json.loads(self.store.read(name))
+                    for v in log_versions(self.store, after=attempt_id - 1):
+                        interleaved = read_record(self.store, v)
                         restamp |= self._reconcile_interleaved(
                             tx, interleaved, my_tables, txn
                         )
@@ -1132,21 +1115,10 @@ actions.DropTable` for why clearing the live set on fold is
         at both boundary states."""
         drops: list[dict] = []
         versions: set[int] = set()
-        for name in reversed(self.store.list_prefix_ordered(LOG_PREFIX)):
-            try:
-                record = json.loads(self.store.read(name))
-            except Exception:
-                # tolerate ONLY records that are actually GONE (raced
-                # vacuum_log mid-walk). A record that exists but fails
-                # to read must re-raise: silently skipping a corrupt
-                # NEWEST drop record would make this walk find an OLDER
-                # drop of the same name and resurrect the wrong
-                # incarnation — a silent wrong-data restore where a
-                # loud store error was available (review catch)
-                if self.store.exists(name) is False:
-                    continue
-                raise
-            v = int(name[len(LOG_PREFIX):])
+        # a record vacuum_log reclaims mid-walk is skipped; a corrupt one
+        # raises — skipping a corrupt NEWEST drop record would find an
+        # OLDER drop of the name and resurrect the wrong incarnation
+        for v, record in records_newest_first(self.store):
             versions.add(v)
             hit = False
             for a in record.get("actions", []):
@@ -1227,10 +1199,7 @@ actions.DropTable` for why clearing the live set on fold is
         RECOVERABLE candidate only, one pinned replay + O(files/page)
         LIST pages (exactly one undrop's probe bill)."""
         drops, record_versions = self._walk_drops()
-        checkpoints = [
-            int(n[len(CHECKPOINT_PREFIX):])
-            for n in self.store.list_prefix_ordered(CHECKPOINT_PREFIX)
-        ]
+        checkpoints = checkpoint_versions(self.store)
         current = replay_log(self.store)
         newest_seen: set[str] = set()
         out: list[dict] = []
@@ -2896,52 +2865,24 @@ actions.DropTable` for why clearing the live set on fold is
             return self.spark.createDataFrame([], stored)
         return self._read_live(table, snap, stored, files)
 
-    @staticmethod
-    def _ts_micros(ts: Union[str, datetime.datetime]) -> int:
-        """Normalize a user-supplied timestamp bound to epoch micros.
-        Naive datetimes / ISO strings are taken as UTC, matching the
-        wall-clock recorded at commit (``time.time()``)."""
-        if isinstance(ts, str):
-            try:
-                ts = datetime.datetime.fromisoformat(ts)
-            except ValueError as exc:
-                raise TypeMismatchError(
-                    f"not an ISO timestamp: {ts!r}"
-                ) from exc
-        if not isinstance(ts, datetime.datetime):
-            raise TypeMismatchError(
-                f"timestamp must be ISO string or datetime, got {type(ts).__name__}"
-            )
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=datetime.timezone.utc)
-        return int(ts.timestamp() * 1_000_000)
-
     def _version_at_timestamp(self, ts: Union[str, datetime.datetime]) -> int:
         """Newest committed version whose recorded commit wall-clock is
         <= ``ts`` (Delta's TIMESTAMP AS OF resolution). Commits from
         before timestamps were recorded count as epoch-0 (always
         eligible). Raises if the bound precedes every commit."""
-        bound = self._ts_micros(ts)
-        names = list(self.store.list_prefix_ordered(LOG_PREFIX))
+        bound = ts_micros(ts)
+        versions = log_versions(self.store)
         # binary search the newest record with ts <= bound: O(log n)
-        # record reads. Exact because in-commit timestamps are monotonic
-        # (commit stamps max(now, prev_ts + 1) — Delta's ICT), so the
-        # recorded clocks form a sorted sequence even under writer skew.
-        # Caveat (Delta documents the same for ICT enablement): records
-        # written BEFORE monotonic stamping may hold skewed clocks;
-        # resolution inside that legacy region is best-effort, while
-        # every post-upgrade commit stamps above the replayed maximum
-        # (Snapshot.last_ts), so bounds targeting new commits are exact.
-        i, j = 0, len(names)
-        while i < j:
-            mid = (i + j) // 2
-            record = json.loads(self.store.read(names[mid]))
-            if int(record.get("ts", 0)) <= bound:
-                i = mid + 1
-            else:
-                j = mid
+        # record reads, exact because recorded stamps are monotonic
+        # (encode_record). Records written before monotonic stamping
+        # may hold skewed clocks: best-effort there, as in Delta.
+        i = bisect.bisect_right(
+            versions,
+            bound,
+            key=lambda v: int(read_record(self.store, v).get("ts", 0)),
+        )
         if i > 0:
-            return int(names[i - 1][len(LOG_PREFIX):])
+            return versions[i - 1]
         raise TableNotFoundError(
             f"no commit at or before {ts!r} (earliest commit is newer)"
         )
@@ -2969,12 +2910,10 @@ actions.DropTable` for why clearing the live set on fold is
             "add": "WRITE",
             "remove": "DELETE",
             "metadata": "ALTER",
-            "add_dv": "DELETE",
+            "dv": "DELETE",
         }
         rows = []
-        names = list(self.store.list_prefix_ordered(LOG_PREFIX))
-        for name in reversed(names):
-            record = json.loads(self.store.read(name))
+        for v, record in records_newest_first(self.store):
             actions = record["actions"]
             touched = sorted(
                 {next(iter(a.values())).get("table", "") for a in actions}
@@ -2987,7 +2926,7 @@ actions.DropTable` for why clearing the live set on fold is
             ts_us = record.get("ts")
             rows.append(
                 (
-                    int(name[len(LOG_PREFIX):]),
+                    v,
                     datetime.datetime.fromtimestamp(
                         ts_us / 1_000_000, tz=datetime.timezone.utc
                     ).replace(tzinfo=None)
@@ -4888,8 +4827,8 @@ actions.DropTable` for why clearing the live set on fold is
             raise ExistingTxError("vacuum must run outside a transaction")
         import time
 
-        log_names = self.store.list_prefix_ordered(LOG_PREFIX)
-        latest_version = int(log_names[-1][len(LOG_PREFIX):]) if log_names else 0
+        versions = log_versions(self.store)
+        latest_version = versions[-1] if versions else 0
         lo = max(1, latest_version - retain_versions)
         try:
             base = replay_log(self.store, as_of=lo)
@@ -4918,12 +4857,10 @@ actions.DropTable` for why clearing the live set on fold is
         for masked in base.dvs.values():
             for dv_list in masked.values():
                 keep.update(dv_list)
-        for name in log_names:
-            v = int(name[len(LOG_PREFIX):])
+        for v in versions:
             if v <= base.version:
                 continue
-            record = json.loads(self.store.read(name))
-            for a in record["actions"]:
+            for a in read_record(self.store, v)["actions"]:
                 if "add" in a:
                     keep.add(a["add"]["name"])
                     _keep_bloom_refs(a["add"].get("blooms", {}))
@@ -5024,46 +4961,33 @@ actions.DropTable` for why clearing the live set on fold is
         newest = newest_checkpoint_version(self.store)
         if newest <= 0:
             return {"objects": [], "count": 0} if dry_run else 0
-        names = self.store.list_prefix_ordered(LOG_PREFIX)
+        versions = log_versions(self.store)
         keep_from = newest  # oldest version that must stay readable
-        if min_age_seconds > 0 and names:
+        if min_age_seconds > 0 and versions:
             cutoff_us = int((time.time() - min_age_seconds) * 1_000_000)
 
-            def _ts(name: str) -> int:
+            def _ts(v: int) -> int:
                 try:
-                    return int(json.loads(self.store.read(name)).get("ts", 0))
+                    return int(read_record(self.store, v).get("ts", 0))
                 except Exception:
                     # unreadable: probe as YOUNG — spares more history,
                     # never reclaims more
                     return cutoff_us + 1
 
             # first version with ts > cutoff (ICT-monotonic bisect)
-            i, j = 0, len(names)
-            while i < j:
-                mid = (i + j) // 2
-                if _ts(names[mid]) > cutoff_us:
-                    j = mid
-                else:
-                    i = mid + 1
-            if i < len(names):
-                keep_from = min(keep_from, int(names[i][len(LOG_PREFIX):]))
+            i = bisect.bisect_right(versions, cutoff_us, key=_ts)
+            if i < len(versions):
+                keep_from = min(keep_from, versions[i])
         # the cut: newest checkpoint at or below keep_from — everything
         # at/above it survives, so every retained version keeps its
         # anchor checkpoint AND the records between (reconstructable)
-        horizon = 0
-        for name in self.store.list_prefix_ordered(CHECKPOINT_PREFIX):
-            version = int(name[len(CHECKPOINT_PREFIX):])
-            if version <= keep_from:
-                horizon = version
-            else:
-                break
+        horizon = max(
+            (c for c in checkpoint_versions(self.store) if c <= keep_from),
+            default=0,
+        )
         if horizon <= 0:
             return {"objects": [], "count": 0} if dry_run else 0
-        if (
-            not dry_run
-            and names
-            and int(names[0][len(LOG_PREFIX):]) < horizon
-        ):
+        if not dry_run and versions and versions[0] < horizon:
             # about to create the FIRST version gap (or widen one):
             # stamp the truncatedHistory reader feature BEFORE deleting
             # so any client lacking dense-version gap detection fails
@@ -5074,19 +4998,12 @@ actions.DropTable` for why clearing the live set on fold is
             self._commit_protocol_record([FEATURE_TRUNCATED_HISTORY], [])
         deleted = 0
         report: list[dict] = []
-        for name in names:
-            version = int(name[len(LOG_PREFIX):])
-            if version >= horizon:
-                break  # ascending: everything from here up is retained
-            if dry_run:
-                report.append({"name": name, "version": version})
-                continue
-            self.store.delete(name)
-            deleted += 1
-        for name in self.store.list_prefix_ordered(CHECKPOINT_PREFIX):
-            version = int(name[len(CHECKPOINT_PREFIX):])
-            if version >= horizon:
-                break
+        below = [(log_name(v), v) for v in versions if v < horizon] + [
+            (checkpoint_name(v), v)
+            for v in checkpoint_versions(self.store)
+            if v < horizon
+        ]
+        for name, version in below:
             if dry_run:
                 report.append({"name": name, "version": version})
                 continue
@@ -5103,16 +5020,7 @@ actions.DropTable` for why clearing the live set on fold is
         # checkpoint. An unreadable retained checkpoint makes the
         # reference set unknowable: the sweep SKIPS entirely
         # (conservative — spares more, never reclaims a live part).
-        from delta_lake_experiment_spark.plans.snapshot import (
-            CHECKPOINT_PART_PREFIX,
-        )
-
-        candidates = []
-        for name in self.store.list_prefix_ordered(CHECKPOINT_PART_PREFIX):
-            version = int(name[len(CHECKPOINT_PART_PREFIX):].split("_", 1)[0])
-            if version >= horizon:
-                break  # zero-padded versions: ascending
-            candidates.append((name, version))
+        candidates = checkpoint_parts(self.store, below=horizon)
         if not candidates:
             # steady state at streaming cadence: nothing below the
             # horizon -> ZERO reference reads (r12 review finding 4)
@@ -5121,32 +5029,16 @@ actions.DropTable` for why clearing the live set on fold is
             return deleted
         referenced: set[str] = set()
         pending = {n for n, _ in candidates}
-        retained = [
-            n
-            for n in self.store.list_prefix_ordered(CHECKPOINT_PREFIX)
-            if int(n[len(CHECKPOINT_PREFIX):]) >= horizon
-        ]
-        from delta_lake_experiment_spark.plans.protocol import (
-            checkpoint_format,
-            max_supported_checkpoint_format,
-        )
-
+        retained = [v for v in checkpoint_versions(self.store) if v >= horizon]
         # newest first: a quiet table's reused parts are referenced by
         # every retained checkpoint, so the FIRST read usually proves
         # all candidates live and the scan stops — the full walk only
         # happens when something is genuinely reclaimable
-        for name in reversed(retained):
+        for version in reversed(retained):
             try:
-                d = json.loads(self.store.read(name))
-                fmt = checkpoint_format(d)
-                if fmt > max_supported_checkpoint_format():
-                    # a future-format retained checkpoint may keep its
-                    # part references in a shape this build cannot see:
-                    # an empty/partial reference set here would sweep
-                    # parts that checkpoint still needs (r12 review
-                    # finding 2) — skip the sweep conservatively
-                    raise ValueError(f"unreadable checkpoint format {fmt}")
-                ref = d.get("live_ref", [])
+                # a future-format checkpoint raises too: an empty or
+                # partial reference set would sweep parts it still needs
+                referenced |= checkpoint_refs(self.store, version)
             except Exception as e:
                 # surface the skip (ADVICE r12): an operator must be
                 # able to distinguish "nothing reclaimable" from
@@ -5160,20 +5052,15 @@ actions.DropTable` for why clearing the live set on fold is
                     " retained checkpoint %s is unreadable (%s); %d"
                     " below-horizon part(s) were spared and will be"
                     " retried next pass",
-                    name, e, len(candidates),
+                    checkpoint_name(version), e, len(candidates),
                 )
                 if dry_run:
                     return {
                         "objects": report,
                         "count": len(report),
-                        "skipped_part_sweep": name,
+                        "skipped_part_sweep": checkpoint_name(version),
                     }
                 return deleted
-            if isinstance(ref, dict):
-                for ps in ref.values():
-                    referenced.update(ps)
-            else:
-                referenced.update(ref)
             pending -= referenced
             if not pending:
                 break  # every candidate is referenced: nothing to sweep
@@ -5871,21 +5758,11 @@ actions.DropTable` for why clearing the live set on fold is
                 snap.protocol["wf"]
             ):
                 return
-            payload = {
-                "id": snap.version + 1,
-                "cv": 2,
-                "ts": max(int(self._clock() * 1_000_000), snap.last_ts + 1),
-                "actions": [
-                    Protocol(
-                        reader_features=sorted(rf),
-                        writer_features=sorted(wf),
-                    ).to_json()
-                ],
-            }
+            proto = Protocol(reader_features=sorted(rf), writer_features=sorted(wf))
+            now_us = int(self._clock() * 1_000_000)
+            record = encode_record(snap.version + 1, [proto], now_us, snap.last_ts)
             try:
-                self.store.put_if_absent(
-                    log_name(snap.version + 1), json.dumps(payload).encode()
-                )
+                self.store.put_if_absent(log_name(snap.version + 1), record)
                 return
             except ObjectExistsError:
                 continue  # collided: re-resolve (someone may have stamped)

@@ -15,14 +15,28 @@ Scale notes (100 TB / 10⁶-commit log):
   the standard Delta-protocol fix.
 - ``Snapshot.live_files`` + per-file stats let scans hand Spark a pruned
   path list; Parquet row-group stats then prune further inside each file.
+
+Log format: this module is the only code that reads or writes
+``_log_``/``_checkpoint_`` names. ``log_versions`` and
+``checkpoint_versions`` are the anchored LISTs (parsed versions, never
+names), ``read_record``/``encode_record`` the record codec (``cv``,
+``ts``, ``txn`` and the in-commit-timestamp rule), ``dense_tail`` the
+gap check, ``records_newest_first`` the newest-first walk, ``ts_micros``
+the timestamp-bound parser and ``checkpoint_parts``/``checkpoint_refs``
+the sidecar bookkeeping retention needs.
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 from dataclasses import dataclass, field
-from typing import Any, Optional
+from typing import Any, Iterator, Optional
 
+from delta_lake_experiment_spark.errors import (
+    HistoryTruncatedError,
+    TypeMismatchError,
+)
 from delta_lake_experiment_spark.plans.actions import (
     DECLARATIONS,
     Action,
@@ -80,6 +94,152 @@ def checkpoint_part_prefix(version: int) -> str:
     """Sidecar objects of checkpoint ``version`` share this name prefix
     so retention can reclaim them with their checkpoint."""
     return f"{CHECKPOINT_PART_PREFIX}{version:020d}_"
+
+
+def _list_versions(store: ObjectStorage, prefix: str, name_of, after) -> list[int]:
+    start = name_of(after) if after is not None and after >= 0 else None
+    return [
+        int(n[len(prefix):])
+        for n in store.list_prefix_ordered(prefix, start_after=start)
+    ]
+
+
+def log_versions(
+    store: ObjectStorage,
+    after: Optional[int] = None,
+    upto: Optional[int] = None,
+) -> list[int]:
+    """Committed log versions in ``(after, upto]``, ascending: ONE LIST
+    of the log prefix anchored past ``after`` (S3 StartAfter), so a
+    reader positioned near the head lists O(new commits) keys. No
+    ``after`` (or a negative one) lists the whole surviving log."""
+    versions = _list_versions(store, LOG_PREFIX, log_name, after)
+    if upto is not None:
+        versions = versions[: bisect.bisect_right(versions, upto)]
+    return versions
+
+
+def checkpoint_versions(
+    store: ObjectStorage, after: Optional[int] = None
+) -> list[int]:
+    """Checkpoint versions past ``after``, ascending (one anchored LIST)."""
+    return _list_versions(store, CHECKPOINT_PREFIX, checkpoint_name, after)
+
+
+def checkpoint_parts(store: ObjectStorage, below: int) -> list[tuple[str, int]]:
+    """``(name, checkpoint version)`` of every sidecar part minted by a
+    checkpoint older than ``below``, ascending (one LIST; zero-padded
+    versions sort numerically)."""
+    parts = []
+    for name in store.list_prefix_ordered(CHECKPOINT_PART_PREFIX):
+        version = int(name[len(CHECKPOINT_PART_PREFIX):].split("_", 1)[0])
+        if version >= below:
+            break
+        parts.append((name, version))
+    return parts
+
+
+def checkpoint_refs(store: ObjectStorage, version: int) -> set[str]:
+    """Sidecar part names checkpoint ``version`` references. Raises when
+    the payload is unreadable or of a format newer than this build (its
+    references may take a shape this build cannot see)."""
+    d = json.loads(store.read(checkpoint_name(version)))
+    fmt = checkpoint_format(d)
+    if fmt > max_supported_checkpoint_format():
+        raise ValueError(f"unreadable checkpoint format {fmt}")
+    ref = d.get("live_ref", [])
+    if isinstance(ref, dict):  # format 3: parts grouped by table
+        return {p for ps in ref.values() for p in ps}
+    return set(ref)
+
+
+def read_record(store: ObjectStorage, version: int) -> dict:
+    """The parsed log record of ``version``."""
+    return json.loads(store.read(log_name(version)))
+
+
+def encode_record(
+    version: int,
+    actions: list[Action],
+    ts_us: int,
+    floor_ts: int,
+    txn: Optional[tuple[str, int]] = None,
+) -> bytes:
+    """The log record committing ``actions`` as ``version``. ``cv`` 2:
+    adds carry rewrite provenance ("rw"), so reconciliation may trust an
+    untagged add to be a FRESH insert. ``ts``: the writer clock
+    ``ts_us`` raised to ``floor_ts + 1`` over the newest stamp it has
+    seen (Delta's inCommitTimestamp), so recorded clocks never regress
+    under skew and the timestamp bisects stay exact. ``txn``: the
+    (app_id, batch) marker of exactly-once streaming sinks."""
+    payload: dict[str, Any] = {
+        "id": version,
+        "cv": 2,
+        "ts": max(ts_us, floor_ts + 1),
+        "actions": [a.to_json() for a in actions],
+    }
+    if txn is not None:
+        payload["txn"] = {"app_id": txn[0], "batch": int(txn[1])}
+    return json.dumps(payload).encode()
+
+
+def dense_tail(
+    versions: list[int], after: int, upto: Optional[int] = None
+) -> list[int]:
+    """The versions of an ascending listing past ``after`` that a
+    reader folding ``(after, upto]`` needs, checked dense. Log versions
+    are dense by construction (a commit is a put-if-absent of exactly
+    newest + 1), so a hole means ``vacuum_log`` reclaimed records:
+    raise :class:`HistoryTruncatedError` naming them when the hole
+    starts at or below ``upto`` (one above it is no concern here)."""
+    tail = []
+    expected = after + 1
+    for v in versions:
+        if upto is not None and expected > upto:
+            break
+        if v != expected:
+            raise HistoryTruncatedError(
+                f"log records v{expected}..v{v - 1} have been reclaimed"
+                " by vacuum_log"
+            )
+        tail.append(v)
+        expected = v + 1
+    return tail
+
+
+def records_newest_first(store: ObjectStorage) -> Iterator[tuple[int, dict]]:
+    """``(version, record)`` of the surviving log, newest first. A
+    record that is GONE when read (a concurrent ``vacuum_log``) is
+    skipped; one that exists but fails to read re-raises, because
+    skipping it would silently answer from an older record."""
+    for v in reversed(log_versions(store)):
+        try:
+            record = read_record(store, v)
+        except Exception:
+            if store.exists(log_name(v)) is False:
+                continue
+            raise
+        yield v, record
+
+
+def ts_micros(ts: Any) -> int:
+    """A user timestamp bound (ISO string or datetime) as epoch micros.
+    Naive values are UTC, matching the recorded commit wall-clock
+    (``time.time()``)."""
+    import datetime as _dt
+
+    if isinstance(ts, str):
+        try:
+            ts = _dt.datetime.fromisoformat(ts)
+        except ValueError as exc:
+            raise TypeMismatchError(f"not an ISO timestamp: {ts!r}") from exc
+    if not isinstance(ts, _dt.datetime):
+        raise TypeMismatchError(
+            f"timestamp must be ISO string or datetime, got {type(ts).__name__}"
+        )
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=_dt.timezone.utc)
+    return int(ts.timestamp() * 1_000_000)
 
 
 def _parts_to_live(store: ObjectStorage, parts: list[str]) -> dict:
@@ -149,10 +309,6 @@ class _LazyLive:
             # same no-masking rule replay_log's checkpoint path follows
             # (pass-2 review finding).
             if any(self.store.exists(p) is False for p in parts):
-                from delta_lake_experiment_spark.errors import (
-                    HistoryTruncatedError,
-                )
-
                 raise HistoryTruncatedError(
                     f"checkpoint sidecar parts for table {table!r} are"
                     " gone - this snapshot's base checkpoint was"
@@ -820,19 +976,17 @@ def newest_checkpoint_version(store: ObjectStorage) -> int:
     (usually empty) instead of a full ``_checkpoint_`` prefix LIST."""
     hint = read_last_checkpoint(store)
     if hint is not None:
-        newer = store.list_prefix_ordered(
-            CHECKPOINT_PREFIX, start_after=checkpoint_name(hint)
-        )
+        newer = checkpoint_versions(store, after=hint)
         if newer:
-            return int(newer[-1][len(CHECKPOINT_PREFIX):])
+            return newer[-1]
         # trust the pointer only when its checkpoint object actually
         # exists (a corrupt/ahead pointer must not anchor vacuum_log's
         # horizon); exists()=None (capability unknown) trusts it —
         # every real backend answers
         if store.exists(checkpoint_name(hint)) is not False:
             return hint
-    ckpts = store.list_prefix_ordered(CHECKPOINT_PREFIX)
-    return int(ckpts[-1][len(CHECKPOINT_PREFIX):]) if ckpts else 0
+    ckpts = checkpoint_versions(store)
+    return ckpts[-1] if ckpts else 0
 
 
 def earliest_reconstructable_version(
@@ -847,19 +1001,14 @@ def earliest_reconstructable_version(
     exactly; a store violating the suffix invariant (external deletion)
     fails replay's own gap detection rather than silently serving a
     partial state."""
-    logs = store.list_prefix_ordered(LOG_PREFIX)
-    first_log = int(logs[0][len(LOG_PREFIX):]) if logs else None
-    ckpts = [
-        int(n[len(CHECKPOINT_PREFIX):])
-        for n in store.list_prefix_ordered(CHECKPOINT_PREFIX)
-    ]
+    logs = log_versions(store)
+    first_log = logs[0] if logs else None
+    ckpts = checkpoint_versions(store)
     if first_log is None or first_log == 1:
         return at_least  # full history retained
     for c in ckpts:
         if c + 1 >= first_log:
             return max(c, at_least)
-    from delta_lake_experiment_spark.errors import HistoryTruncatedError
-
     raise HistoryTruncatedError(
         "no retained checkpoint anchors the surviving log records -"
         " store metadata is inconsistent (vacuum_log never produces"
@@ -891,8 +1040,6 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
     :class:`HistoryTruncatedError` (with the reconstructable floor)
     instead of silently serving a state missing commits.
     """
-    from delta_lake_experiment_spark.errors import HistoryTruncatedError
-
     snap = Snapshot(version=0)
     if as_of is None:
         base = newest_checkpoint_version(store)
@@ -938,10 +1085,7 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
         base = None
         if hint is not None and hint <= as_of:
             base = hint
-            for name in store.list_prefix_ordered(
-                CHECKPOINT_PREFIX, start_after=checkpoint_name(hint)
-            ):
-                version = int(name[len(CHECKPOINT_PREFIX):])
+            for version in checkpoint_versions(store, after=hint):
                 if version <= as_of:
                     base = version
                 else:
@@ -951,11 +1095,12 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
             except Exception:
                 snap, base = Snapshot(version=0), None  # stale pointer
         if base is None:
-            for name in reversed(store.list_prefix_ordered(CHECKPOINT_PREFIX)):
-                version = int(name[len(CHECKPOINT_PREFIX):])
+            for version in reversed(checkpoint_versions(store)):
                 if version <= as_of:
                     try:
-                        snap = Snapshot.from_checkpoint(store.read(name), store)
+                        snap = Snapshot.from_checkpoint(
+                            store.read(checkpoint_name(version)), store
+                        )
                         break
                     except Exception:
                         # a concurrent vacuum_log reclaimed this
@@ -966,42 +1111,29 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
                         # instead of a raw store failure
                         continue
     base_version = snap.version
-    expected = snap.version + 1
-    for name in store.list_prefix_ordered(
-        LOG_PREFIX, start_after=log_name(snap.version)
-    ):
-        version = int(name[len(LOG_PREFIX):])
-        if version <= snap.version:
-            continue
-        if version != expected:
-            # records (expected .. version-1) are gone; only raise when
-            # the request actually needs them (an exact-checkpoint
-            # as_of is still served even with a truncated tail above)
-            if as_of is None or expected <= as_of:
-                # floor = the oldest version a reader can still serve
-                # (earliest retained checkpoint anchoring the surviving
-                # records) — what callers retry with, NOT the base
-                # checkpoint this replay happened to anchor on (which
-                # sits BELOW the horizon for a deep time travel). Best
-                # effort: an inconsistent store falls back to the base.
-                try:
-                    floor = earliest_reconstructable_version(store)
-                except Exception:
-                    floor = base_version
-                raise HistoryTruncatedError(
-                    f"log records v{expected}..v{version - 1} have been"
-                    " reclaimed by vacuum_log (retention horizon):"
-                    f" versions above the base checkpoint v{base_version}"
-                    f" and below v{version} are no longer reconstructable"
-                    f" - time travel at or above v{floor}, or configure"
-                    " a longer vacuum_log retention window",
-                    floor=floor,
-                    base=base_version,
-                )
-            break
-        if as_of is not None and version > as_of:
-            break
-        record = json.loads(store.read(name))
+    try:
+        tail = dense_tail(
+            log_versions(store, after=base_version), base_version, as_of
+        )
+    except HistoryTruncatedError as gap:
+        # floor = the oldest version a reader can still serve — what
+        # callers retry with, NOT this replay's base (BELOW the horizon
+        # for a deep time travel). Best effort: an inconsistent store
+        # falls back to the base.
+        try:
+            floor = earliest_reconstructable_version(store)
+        except Exception:
+            floor = base_version
+        raise HistoryTruncatedError(
+            f"{gap} (retention horizon): they are no longer"
+            f" reconstructable from the base checkpoint v{base_version}"
+            f" - time travel at or above v{floor}, or configure a longer"
+            " vacuum_log retention window",
+            floor=floor,
+            base=base_version,
+        ) from None
+    for version in tail:
+        record = read_record(store, version)
         actions = [action_from_json(a) for a in record["actions"]]
         snap.apply(int(record["id"]), actions)
         txn = record.get("txn")
@@ -1009,5 +1141,4 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
             app = str(txn["app_id"])
             snap.txns[app] = max(snap.txns.get(app, -1), int(txn["batch"]))
         snap.last_ts = max(snap.last_ts, int(record.get("ts", 0)))
-        expected = version + 1
     return snap

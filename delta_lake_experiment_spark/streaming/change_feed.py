@@ -23,7 +23,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 
-from delta_lake_experiment_spark.plans.snapshot import LOG_PREFIX, log_name
+from delta_lake_experiment_spark.plans.snapshot import log_versions
 
 
 class ChangeFeedReader:
@@ -41,10 +41,10 @@ class ChangeFeedReader:
 
     def latest_version(self) -> int:
         # anchored at the cursor: O(new commits) LIST keys per poll
-        names = self.client.store.list_prefix_ordered(
-            LOG_PREFIX, start_after=log_name(self.cursor) if self.cursor > 0 else None
+        versions = log_versions(
+            self.client.store, after=self.cursor if self.cursor > 0 else None
         )
-        return int(names[-1][len(LOG_PREFIX):]) if names else self.cursor
+        return versions[-1] if versions else self.cursor
 
     def poll(self) -> Optional[tuple[DataFrame, int]]:
         latest = self.latest_version()

@@ -77,7 +77,7 @@ stream's lag, the same operational rule as Delta's.
 
 from __future__ import annotations
 
-import json
+import bisect
 from dataclasses import dataclass, field
 from typing import Any, Iterator, Optional
 
@@ -88,9 +88,11 @@ from pyspark.sql.datasource import (
 )
 
 from delta_lake_experiment_spark.plans.snapshot import (
-    LOG_PREFIX,
-    log_name,
+    dense_tail,
+    log_versions,
+    read_record,
     replay_log,
+    ts_micros,
 )
 from delta_lake_experiment_spark.storage.objectstore import LocalObjectStorage
 
@@ -266,47 +268,34 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # version just below the first commit whose recorded
             # wall-clock >= bound; a bound past the newest commit tails
             # only FUTURE commits (the friendly choice for a tailing
-            # source). Resolution is one ascending metadata walk.
-            import datetime as _dt
+            # source). Naive bounds are UTC, matching the commit clock.
+            from delta_lake_experiment_spark.errors import TypeMismatchError
 
             try:
-                parsed = _dt.datetime.fromisoformat(str(st))
-            except ValueError:
+                bound = ts_micros(str(st))
+            except TypeMismatchError:
                 raise ValueError(
                     f"engine_table source: startingTimestamp {st!r} is"
                     " not an ISO timestamp"
                 ) from None
-            if parsed.tzinfo is None:
-                # naive = UTC, matching the commit wall-clock
-                parsed = parsed.replace(tzinfo=_dt.timezone.utc)
-            bound = int(parsed.timestamp() * 1_000_000)
             store0 = self._bound if self._bound is not None else _resolve_store(
                 self.store_factory_key, self.root
             )
-            names = store0.list_prefix_ordered(LOG_PREFIX)
+            versions = log_versions(store0)
             # binary search the first commit with ts >= bound: O(log n)
-            # record reads instead of a full ascending walk. Exactness
-            # rests on in-commit-timestamp monotonicity (the client
-            # stamps max(now, prev_ts + 1) — Delta's ICT — so recorded
-            # clocks never regress even under writer clock skew).
-            # Pre-ICT records may hold skewed clocks; resolution inside
-            # that legacy region is best-effort (Delta's documented
-            # ICT-enablement semantics), and bounds targeting
-            # post-upgrade commits stay exact.
-            i, j = 0, len(names)
-            while i < j:
-                mid = (i + j) // 2
-                record = json.loads(store0.read(names[mid]))
-                if int(record.get("ts", 0)) >= bound:
-                    j = mid
-                else:
-                    i = mid + 1
-            if i < len(names):
-                start = int(names[i][len(LOG_PREFIX):]) - 1
+            # record reads, exact because recorded stamps are monotonic
+            # (encode_record); best-effort over pre-ICT records.
+            i = bisect.bisect_left(
+                versions,
+                bound,
+                key=lambda v: int(read_record(store0, v).get("ts", 0)),
+            )
+            if i < len(versions):
+                start = versions[i] - 1
             else:
                 # bound past the newest commit: tail only FUTURE
                 # commits (the friendly choice for a tailing source)
-                start = int(names[-1][len(LOG_PREFIX):]) if names else 0
+                start = versions[-1] if versions else 0
             self.start_version = start
         self.skip_change_commits = (
             str(options.get("skipchangecommits", "false")).lower() == "true"
@@ -407,11 +396,10 @@ class EngineTableStreamReader(DataSourceStreamReader):
         # on a 10⁶-commit log pays O(new commits) LIST keys per trigger
         # instead of re-paging the whole _log_ prefix every trigger
         anchor = self._pos if self._pos is not None else self.start_version
-        after = log_name(anchor) if anchor is not None and anchor >= 0 else None
-        names = store.list_prefix_ordered(LOG_PREFIX, start_after=after)
+        versions = log_versions(store, after=anchor)
         latest = (
-            int(names[-1][len(LOG_PREFIX):])
-            if names
+            versions[-1]
+            if versions
             else (anchor if anchor is not None and anchor >= 0 else 0)
         )
         if not (self.max_commits or self.max_files or self.max_bytes):
@@ -459,13 +447,10 @@ class EngineTableStreamReader(DataSourceStreamReader):
             fbudget = self.max_files or None
             bbudget = self.max_bytes or None
             chosen = base
-            for name in names:
-                v = int(name[len(LOG_PREFIX):])
-                if v <= base:
-                    continue
+            for v in versions:
                 if v > end:
                     break
-                record = self._log_record(store, name, v)
+                record = self._log_record(store, v)
                 n_adds, n_bytes, unknown = 0, 0, False
                 for act in record.get("actions", []):
                     if "add" in act and act["add"].get("table") == self.table:
@@ -540,12 +525,12 @@ class EngineTableStreamReader(DataSourceStreamReader):
                     k: f for k, f in self._snap_files.items() if k == pinned
                 }
 
-    def _log_record(self, store, name: str, version: int) -> dict:
+    def _log_record(self, store, version: int) -> dict:
         """Parsed log record for ``version`` (committed records are
         immutable — cached for the trigger's three consumers)."""
         rec = self._records.get(version)
         if rec is None:
-            rec = json.loads(store.read(name))
+            rec = read_record(store, version)
             self._records[version] = rec
         return rec
 
@@ -571,15 +556,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
         metadata — the pinned shape would read it wrong."""
         if hi <= lo:
             return
-        for name in store.list_prefix_ordered(
-            LOG_PREFIX, start_after=log_name(max(lo, 0))
-        ):
-            v = int(name[len(LOG_PREFIX):])
-            if v <= lo:
-                continue
-            if v > hi:
-                break
-            record = self._log_record(store, name, v)
+        for v in log_versions(store, after=lo, upto=hi):
+            record = self._log_record(store, v)
             for act in record.get("actions", []):
                 kind = next(iter(act))
                 if kind == "drop" and act[kind].get("table") == self.table:
@@ -742,10 +720,8 @@ class EngineTableStreamReader(DataSourceStreamReader):
             # the CREATE commit, which a fresh stream's pinned_version
             # already covers). A real gap inside (lo, hi] still fails
             # loudly below.
-            tail0 = store.list_prefix_ordered(
-                LOG_PREFIX, start_after=log_name(max(lo, 0))
-            )
-            first = int(tail0[0][len(LOG_PREFIX):]) if tail0 else None
+            tail0 = log_versions(store, after=lo)
+            first = tail0[0] if tail0 else None
             recoverable = first is not None and first == lo + 1
             if recoverable:
                 try:
@@ -766,29 +742,20 @@ class EngineTableStreamReader(DataSourceStreamReader):
                     " retained version)) to resync"
                 ) from e
         parts: list[InputPartition] = []
-        expected = lo + 1
-        for name in store.list_prefix_ordered(
-            LOG_PREFIX, start_after=log_name(max(lo, 0))
-        ):
-            v = int(name[len(LOG_PREFIX):])
-            if v <= lo:
-                continue
-            if v > hi:
-                break
-            if v != expected:
-                # log versions are dense; a gap means vacuum_log
-                # reclaimed records this stream still needed — refuse
-                # loudly instead of silently dropping the commits
-                raise ValueError(
-                    f"engine_table source: log records v{expected}.."
-                    f"v{v - 1} have been reclaimed by vacuum_log while"
-                    " this stream was positioned below the retention"
-                    " horizon - restart the stream with a fresh"
-                    " checkpoint (or .option('startingVersion', a"
-                    " retained version)) to resync"
-                )
-            expected = v + 1
-            record = self._log_record(store, name, v)
+        try:
+            tail = dense_tail(log_versions(store, after=lo), lo, hi)
+        except HistoryTruncatedError as gap:
+            # vacuum_log reclaimed records this stream still needed —
+            # refuse loudly instead of silently dropping the commits
+            raise ValueError(
+                f"engine_table source: {gap} while this stream was"
+                " positioned below the retention horizon - restart the"
+                " stream with a fresh checkpoint (or"
+                " .option('startingVersion', a retained version)) to"
+                " resync"
+            ) from None
+        for v in tail:
+            record = self._log_record(store, v)
             adds, removes, dvs, metas = [], [], [], 0
             for act in record.get("actions", []):
                 kind = next(iter(act))

@@ -308,6 +308,28 @@ def test_timestamp_as_of_and_history(spark, store_dir):
     assert dh.collect()[0]["version"] == 2
 
 
+def test_history_labels_dv_delete_as_delete(spark, store_dir):
+    """A deletion-vector delete reads DELETE in history() and DESCRIBE
+    HISTORY, like a copy-on-write delete — never the raw action kind."""
+    c = DeltaLakeClient(spark, store_dir)
+    c.new_tx()
+    c.create_table("t", "k BIGINT, v STRING")
+    c.write_dataframe(
+        "t", spark.createDataFrame([(1, "a"), (2, "b")], "k BIGINT, v STRING")
+    )
+    c.commit_tx()
+    c.new_tx()
+    c.delete_rows("t", "k", 1, 1, use_dv=True)
+    c.commit_tx()
+
+    newest = c.history(limit=1).collect()[0]
+    described = c.execute("DESCRIBE HISTORY t LIMIT 1").collect()[0]
+    for row in (newest, described):
+        ops = row["operation"].split("+")
+        assert "DELETE" in ops and "DV" not in ops, row["operation"]
+        assert row["num_removed_files"] == 0  # a mask, not a rewrite
+
+
 def test_merge_prunes_table_files_by_source_key_bounds(
     spark, store_dir, monkeypatch
 ):

@@ -1025,6 +1025,53 @@ def test_list_dropped_tables_discovery(tmp_path):
     assert "older incarnation" in listing[2]["reason"]
 
 
+class _VacuumRacingStore(LocalObjectStorage):
+    """Reclaims ``victim`` the moment a reader reaches it: a concurrent
+    vacuum_log landing between a walk's LIST and its read."""
+
+    victim = None
+
+    def read(self, name):
+        if name == self.victim:
+            self.delete(name)
+        return super().read(name)
+
+
+@pytest.mark.parametrize("walk", ["history", "list_dropped_tables"])
+def test_newest_first_walks_skip_reclaimed_raise_on_corrupt(
+    spark, tmp_path, walk
+):
+    """history() and list_dropped_tables() walk the log newest-first:
+    a record vacuum_log reclaims mid-walk simply no longer appears,
+    while a record that is present but unreadable raises instead of
+    being skipped."""
+    store = _VacuumRacingStore(str(tmp_path))
+    c = DeltaLakeClient(spark, store, checkpoint_interval=2)
+    c.new_tx()
+    c.create_table("t", "k BIGINT")
+    c.create_table("keep", "k BIGINT")
+    c.commit_tx()  # v1
+    c.new_tx()
+    c.write_row("keep", [1])
+    c.commit_tx()  # v2
+    c.new_tx()
+    c.drop_table("t")
+    c.commit_tx()  # v3 = the dropTable protocol stamp, v4 = the drop
+
+    def versions():
+        if walk == "history":
+            return [r["version"] for r in c.history().collect()]
+        return [d["version"] for d in c.list_dropped_tables()]
+
+    store.victim = log_name(1)
+    assert versions() == ([4, 3, 2] if walk == "history" else [4])
+    assert store.exists(log_name(1)) is False
+    store.victim = None
+    store.put(log_name(2), b"{not a record")
+    with pytest.raises(ValueError):
+        versions()
+
+
 def test_replayable_version_horizon():
     """The metadata-only reconstructability judgment matches replay's
     anchor + contiguity contract, including the truncated-history edge

@@ -1524,3 +1524,35 @@ def test_stalled_checkpointer_self_invalidates_after_publish(
 
     ptr = read_last_checkpoint(store)
     assert ptr is not None and store.exists(checkpoint_name(ptr)) is True
+
+
+def test_log_format_has_one_owner():
+    """Only plans/snapshot.py slices log/checkpoint names or imports
+    LOG_PREFIX: every other module lists, reads and writes the log
+    through its helpers (tests and perfbench assert on the on-store
+    layout and stay exempt)."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "delta_lake_experiment_spark",
+    )
+    owner = os.path.join(pkg, "plans", "snapshot.py")
+    slices = ("len(LOG_PREFIX)", "len(CHECKPOINT_PREFIX)", "len(CHECKPOINT_PART_PREFIX)")
+    offenders = []
+    for d, _, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(d, f)
+            if not f.endswith(".py") or path == owner:
+                continue
+            with open(path) as fh:
+                src = fh.read()
+            rel = os.path.relpath(path, pkg)
+            offenders += [f"{rel}: {s}" for s in slices if s in src]
+            offenders += [
+                f"{rel}:{node.lineno}: imports LOG_PREFIX"
+                for node in ast.walk(ast.parse(src))
+                if isinstance(node, ast.ImportFrom)
+                and any(a.name == "LOG_PREFIX" for a in node.names)
+            ]
+    assert offenders == []
