@@ -43,7 +43,9 @@ Scale design (100 TB / 1000 executors):
   rewrite just those files in a second distributed job — never a
   full-table pass. Every verb plans its files through ``_plan_files``
   and publishes Spark-written rewrites through ``_publish_staged``.
-- Log replay is O(commits since last checkpoint), not O(history):
+- A client keeps its snapshot between transactions and folds only the
+  log records committed since (O(records since its last tx)); a cold
+  client's replay is O(commits since last checkpoint), not O(history):
   a checkpoint object is folded every ``checkpoint_interval`` commits.
 """
 
@@ -106,6 +108,7 @@ from delta_lake_experiment_spark.plans.snapshot import (
     checkpoint_refs,
     checkpoint_versions,
     encode_record,
+    fold_tail,
     log_name,
     log_versions,
     newest_checkpoint_version,
@@ -215,6 +218,10 @@ class DeltaLakeClient:
         # the commit). None (default) = never delete log metadata.
         self.log_retention_seconds = log_retention_seconds
         self.tx: Optional[_Tx] = None
+        # the snapshot of the newest version this client has seen, kept
+        # between transactions and advanced by _current_snapshot (None
+        # = cold: the next advance runs a full replay_log)
+        self._kept: Optional[Snapshot] = None
         # table -> (catalog name, BucketScanArea) of the current
         # bucketed-scan registration (scan_bucketed replaces + cleans
         # these per table)
@@ -245,12 +252,40 @@ class DeltaLakeClient:
     # ------------------------------------------------------------------
 
     def new_tx(self) -> None:
-        """Begin a transaction: replay the log, fix the snapshot
-        (snapshot isolation), pick id = newest committed + 1."""
+        """Begin a transaction: advance this client's kept snapshot
+        with the log records committed since its last transaction (a
+        cold client replays the log from the newest checkpoint), fix a
+        copy of it as the tx's view (snapshot isolation), pick id =
+        newest committed + 1."""
         if self.tx is not None:
             raise ExistingTxError("there is an existing transaction")
-        snap = replay_log(self.store)
-        self.tx = _Tx(id=snap.version + 1, snapshot=snap)
+        snap, _ = self._current_snapshot()
+        self.tx = _Tx(id=snap.version + 1, snapshot=snap.copy())
+
+    def _current_snapshot(self) -> tuple[Snapshot, list[dict]]:
+        """The newest committed state and the log records folded to
+        reach it. The client keeps its snapshot between calls and
+        folds only the records committed since (``fold_tail``: one
+        anchored LIST, one read per new record), as Delta clients do.
+        A cold client, or one whose kept snapshot cannot be advanced
+        exactly — ``vacuum_log`` reclaimed records or base sidecar
+        parts it had not seen — runs a full ``replay_log`` instead, and
+        then no records are returned. Any other failure mid-fold
+        discards the kept snapshot too, so it is never half folded.
+
+        The result IS the kept snapshot: callers read it, and take
+        ``.copy()`` before handing it out or touching live lists."""
+        kept, self._kept = self._kept, None
+        if kept is not None:
+            try:
+                records = fold_tail(self.store, kept)
+            except HistoryTruncatedError:
+                pass
+            else:
+                self._kept = kept
+                return kept, records
+        self._kept = replay_log(self.store)
+        return self._kept, []
 
     def commit_tx(
         self,
@@ -345,10 +380,11 @@ class DeltaLakeClient:
                             f"tx {attempt_id}: another transaction committed this version"
                         )
                     retry_independent -= 1
-                    # fold in the interleaved commits; file-granularity
-                    # reconciliation raises on genuine conflicts and
-                    # returns the shared tables needing a stamp re-key
-                    latest = replay_log(self.store)
+                    # fold the interleaved commits into the kept
+                    # snapshot; file-granularity reconciliation raises
+                    # on genuine conflicts and returns the shared
+                    # tables needing a stamp re-key
+                    latest, records = self._current_snapshot()
                     # an interleaved commit may have UPGRADED the
                     # protocol past this client — re-gate before
                     # retargeting (the fold above already re-gated
@@ -358,11 +394,14 @@ class DeltaLakeClient:
                         f"commit retry of tx {attempt_id}",
                     )
                     floor_ts = max(floor_ts, latest.last_ts)
+                    # each record in (attempt_id - 1, latest] is read
+                    # once: the fold returned those it read; the kept
+                    # snapshot may already hold older ones (it moved
+                    # during this tx, or a fallback replay read them)
+                    folded = {int(r["id"]): r for r in records}
                     restamp: set[str] = set()
-                    # anchored at the collided version: O(interleaved
-                    # commits) listed keys, not the whole log prefix
-                    for v in log_versions(self.store, after=attempt_id - 1):
-                        interleaved = read_record(self.store, v)
+                    for v in range(attempt_id, latest.version + 1):
+                        interleaved = folded.get(v) or read_record(self.store, v)
                         restamp |= self._reconcile_interleaved(
                             tx, interleaved, my_tables, txn
                         )
@@ -1200,7 +1239,7 @@ actions.DropTable` for why clearing the live set on fold is
         LIST pages (exactly one undrop's probe bill)."""
         drops, record_versions = self._walk_drops()
         checkpoints = checkpoint_versions(self.store)
-        current = replay_log(self.store)
+        current = self._current_snapshot()[0].copy()
         newest_seen: set[str] = set()
         out: list[dict] = []
         for d in drops:  # newest-first by construction
@@ -2988,7 +3027,7 @@ actions.DropTable` for why clearing the live set on fold is
         snap = (
             self._effective_snapshot(self.tx)
             if self.tx is not None
-            else replay_log(self.store)
+            else self._current_snapshot()[0].copy()
         )
         if table not in snap.tables:
             raise TableNotFoundError(table)
@@ -3450,7 +3489,7 @@ actions.DropTable` for why clearing the live set on fold is
         elif self.tx is not None:
             to_snap = self.tx.snapshot
         else:
-            to_snap = replay_log(self.store)
+            to_snap = self._current_snapshot()[0].copy()
         from_snap = replay_log(self.store, as_of=from_version)
         if table not in to_snap.tables:
             if table in from_snap.tables:
@@ -5744,7 +5783,7 @@ actions.DropTable` for why clearing the live set on fold is
                 f" writer={sorted(supported_writer_features())}"
             )
         self._commit_protocol_record(rf, wf)
-        return replay_log(self.store).protocol
+        return self._current_snapshot()[0].copy().protocol
 
     def _commit_protocol_record(self, rf: list, wf: list) -> None:
         """Commit a standalone protocol-upgrade log record (used by
@@ -5753,7 +5792,7 @@ actions.DropTable` for why clearing the live set on fold is
         Delta's ALTER TABLE ... SET protocol upgrades commit). No-op
         when the log already carries the features."""
         for _ in range(8):
-            snap = replay_log(self.store)
+            snap = self._current_snapshot()[0].copy()
             if set(rf) <= set(snap.protocol["rf"]) and set(wf) <= set(
                 snap.protocol["wf"]
             ):
@@ -6187,11 +6226,17 @@ actions.DropTable` for why clearing the live set on fold is
     def _maybe_checkpoint(self, tx: _Tx) -> None:
         if self.checkpoint_interval <= 0 or tx.id % self.checkpoint_interval != 0:
             return
-        # Replay the authoritative log rather than trusting this tx's
+        # Fold the authoritative log rather than trusting this tx's
         # in-memory view: with commit retry, other commits may have
-        # interleaved between our snapshot and our log record.
-        snap = replay_log(self.store)
+        # interleaved between our snapshot and our log record. The kept
+        # snapshot serves only while it is anchored at the newest
+        # checkpoint; past another client's checkpoint, replay from
+        # that one as a cold client would, so sidecar reuse names its
+        # parts and never older ones retention may have reclaimed.
         newest_ckpt = newest_checkpoint_version(self.store)
+        if self._kept is not None and self._kept.base != newest_ckpt:
+            self._kept = None
+        snap, _ = self._current_snapshot()
         if newest_ckpt >= snap.version:
             # already checkpointed (race lost) or superseded by a newer
             # one (this writer stalled past other checkpointers). The
@@ -6246,6 +6291,11 @@ actions.DropTable` for why clearing the live set on fold is
                 if newest:
                     write_last_checkpoint(self.store, newest)
                 return
+            # re-anchor the kept snapshot at the checkpoint just
+            # published, as a cold client would load it: the next
+            # checkpoint then reuses these sidecar parts for tables
+            # nobody touches
+            self._kept = Snapshot.from_checkpoint(payload, self.store)
         # advisory pointer: future replays anchor their listing here
         # (same version either way when we lost the checkpoint race)
         write_last_checkpoint(self.store, snap.version)

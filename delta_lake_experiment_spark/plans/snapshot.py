@@ -388,6 +388,11 @@ class Snapshot:
     # regress under writer clock skew, making TIMESTAMP AS OF /
     # startingTimestamp binary searches exact)
     last_ts: int = 0
+    # version of the checkpoint this state was loaded from (0 = the
+    # empty genesis state). A client checkpoints from the snapshot it
+    # keeps only while this is the newest checkpoint, so sidecar reuse
+    # never names parts of a superseded base retention may reclaim.
+    base: int = field(default=0, compare=False)
     # deferred by-table sidecar hydration (format-3 checkpoints) —
     # shared BY REFERENCE across snapshot copies so parts are read at
     # most once per process; None = fully materialized. A table absent
@@ -423,6 +428,7 @@ class Snapshot:
                 "wf": list(self.protocol["wf"]),
             },
             last_ts=self.last_ts,
+            base=self.base,
             _lazy=self._lazy,
         )
         for _, attr, copy in DECLARATIONS:
@@ -829,7 +835,8 @@ class Snapshot:
 
     @classmethod
     def from_dict(cls, d: dict) -> "Snapshot":
-        snap = cls(version=int(d["version"]), tables=dict(d["tables"]))
+        version = int(d["version"])
+        snap = cls(version=version, tables=dict(d["tables"]), base=version)
         snap.dvs = {
             t: {o: list(names) for o, names in objs.items()}
             for t, objs in d.get("dvs", {}).items()
@@ -1018,6 +1025,54 @@ def earliest_reconstructable_version(
     )
 
 
+def fold_tail(
+    store: ObjectStorage, snap: Snapshot, upto: Optional[int] = None
+) -> list[dict]:
+    """Fold every committed record after ``snap.version`` (up to
+    ``upto``) into ``snap`` in place; return the records read,
+    ascending. One anchored LIST plus one read per new record: a client
+    advancing the snapshot it kept from its last transaction pays
+    O(records since then), not a checkpoint parse.
+
+    Raises :class:`HistoryTruncatedError` when ``snap`` cannot be
+    advanced exactly: a hole in the listed tail (``vacuum_log``
+    reclaimed records it has not seen; ``floor`` names the oldest
+    version still reconstructable), or base checkpoint sidecar parts
+    that ``vacuum_log`` reclaimed (see :class:`_LazyLive`). ``snap`` is
+    then partly folded; callers discard it."""
+    after = snap.version
+    try:
+        tail = dense_tail(log_versions(store, after=after), after, upto)
+    except HistoryTruncatedError as gap:
+        # floor = the oldest version a reader can still serve — what
+        # callers retry with, NOT this fold's base (BELOW the horizon
+        # for a deep time travel). Best effort: an inconsistent store
+        # falls back to the base.
+        try:
+            floor = earliest_reconstructable_version(store)
+        except Exception:
+            floor = after
+        raise HistoryTruncatedError(
+            f"{gap} (retention horizon): they are no longer"
+            f" reconstructable from v{after} - time travel at or above"
+            f" v{floor}, or configure a longer vacuum_log retention window",
+            floor=floor,
+            base=after,
+        ) from None
+    records = []
+    for version in tail:
+        record = read_record(store, version)
+        actions = [action_from_json(a) for a in record["actions"]]
+        snap.apply(int(record["id"]), actions)
+        txn = record.get("txn")
+        if txn:
+            app = str(txn["app_id"])
+            snap.txns[app] = max(snap.txns.get(app, -1), int(txn["batch"]))
+        snap.last_ts = max(snap.last_ts, int(record.get("ts", 0)))
+        records.append(record)
+    return records
+
+
 def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
     """Reconstruct the snapshot: newest checkpoint + later log records.
 
@@ -1031,10 +1086,13 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
     Scale contract (the reference replays — and LISTs — the full
     history per tx begin, transactions.go:58-62): the current-state
     path resolves the base checkpoint via the advisory
-    ``_last_checkpoint`` pointer and anchors the log listing past it
-    (``start_after`` — S3 StartAfter), so a ``new_tx`` on a 10⁶-commit
-    log costs O(commits since checkpoint) LIST/read calls, not ~1 000
-    LIST pages. Log versions are dense by construction (a commit is a
+    ``_last_checkpoint`` pointer and :func:`fold_tail` anchors the log
+    listing past it (``start_after`` — S3 StartAfter), so a cold replay
+    on a 10⁶-commit log costs O(commits since checkpoint) LIST/read
+    calls, not ~1 000 LIST pages. A client runs it only cold or as a
+    fallback: between transactions it keeps its snapshot and advances
+    it with :func:`fold_tail` alone (O(records since its last tx)).
+    Log versions are dense by construction (a commit is a
     put-if-absent of exactly newest+1), so a gap in the listed tail
     means ``vacuum_log`` reclaimed the records: replay raises
     :class:`HistoryTruncatedError` (with the reconstructable floor)
@@ -1110,35 +1168,5 @@ def replay_log(store: ObjectStorage, as_of: Optional[int] = None) -> Snapshot:
                         # below raises the NAMED truncation error
                         # instead of a raw store failure
                         continue
-    base_version = snap.version
-    try:
-        tail = dense_tail(
-            log_versions(store, after=base_version), base_version, as_of
-        )
-    except HistoryTruncatedError as gap:
-        # floor = the oldest version a reader can still serve — what
-        # callers retry with, NOT this replay's base (BELOW the horizon
-        # for a deep time travel). Best effort: an inconsistent store
-        # falls back to the base.
-        try:
-            floor = earliest_reconstructable_version(store)
-        except Exception:
-            floor = base_version
-        raise HistoryTruncatedError(
-            f"{gap} (retention horizon): they are no longer"
-            f" reconstructable from the base checkpoint v{base_version}"
-            f" - time travel at or above v{floor}, or configure a longer"
-            " vacuum_log retention window",
-            floor=floor,
-            base=base_version,
-        ) from None
-    for version in tail:
-        record = read_record(store, version)
-        actions = [action_from_json(a) for a in record["actions"]]
-        snap.apply(int(record["id"]), actions)
-        txn = record.get("txn")
-        if txn:
-            app = str(txn["app_id"])
-            snap.txns[app] = max(snap.txns.get(app, -1), int(txn["batch"]))
-        snap.last_ts = max(snap.last_ts, int(record.get("ts", 0)))
+    fold_tail(store, snap, as_of)
     return snap

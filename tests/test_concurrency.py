@@ -14,8 +14,17 @@ snapshot replay, and `retry_independent` disjoint-table retargeting /
 import json
 import multiprocessing as mp
 
+import pytest
+
+import delta_lake_experiment_spark.plans.protocol as protomod
 from delta_lake_experiment_spark import DeltaLakeClient
-from delta_lake_experiment_spark.plans.snapshot import LOG_PREFIX, replay_log
+from delta_lake_experiment_spark.errors import UnsupportedTableFeatureError
+from delta_lake_experiment_spark.plans.snapshot import (
+    LOG_PREFIX,
+    log_name,
+    read_record,
+    replay_log,
+)
 from delta_lake_experiment_spark.storage.objectstore import LocalObjectStorage
 
 N_WRITERS = 4
@@ -268,3 +277,103 @@ def test_multiprocess_drop_churn(tmp_path):
     assert deleted >= N_WRITERS * 3  # every churn cycle left >=1 object
     left = set(store.list_prefix_ordered("table_"))
     assert left == {o.name for o in replay_log(store).live_objects("survivor")}
+
+
+class _ReadCountingStore(LocalObjectStorage):
+    """Counts reads per object name."""
+
+    def __init__(self, root):
+        super().__init__(root)
+        self.reads = {}
+
+    def read(self, name):
+        self.reads[name] = self.reads.get(name, 0) + 1
+        return super().read(name)
+
+
+def test_warm_client_sees_other_commits_and_writer_gate(tmp_path, monkeypatch):
+    """A client keeps its snapshot between transactions: its next
+    new_tx folds another client's commits, and a protocol upgrade to a
+    writer feature it lacks stops its commit with the named error, both
+    on a commit retry and on a fresh tx."""
+    root = str(tmp_path / "store")
+    a = DeltaLakeClient(_NoSpark(), root)
+    b = DeltaLakeClient(_NoSpark(), root)
+    a.new_tx()
+    a.create_table("t", "k BIGINT, v BIGINT")
+    a.commit_tx()
+    a.new_tx()
+    a.abort_tx()  # warm: a keeps v1
+
+    b.new_tx()
+    b.write_row("t", [1, 10])
+    b.commit_tx()
+    a.new_tx()
+    assert a.tx.id == 3
+    assert a.tx.snapshot == replay_log(a.store)
+    assert len(a.tx.snapshot.live_objects("t")) == 1
+    a.write_row("t", [2, 20])
+
+    # b stamps a writer feature a (masked below) does not implement
+    # while a's tx is open: a's commit collides, folds the upgrade and
+    # stops at the gate instead of retargeting
+    b.upgrade_protocol(writer_features=["identityColumns"])
+    masked = protomod.supported_writer_features() - {"identityColumns"}
+    monkeypatch.setattr(protomod, "supported_writer_features", lambda: masked)
+    with pytest.raises(UnsupportedTableFeatureError, match="retry") as ei:
+        a.commit_tx()
+    assert ei.value.features == ["identityColumns"]
+    a.new_tx()
+    assert "identityColumns" in a.tx.snapshot.protocol["wf"]
+    a.write_row("t", [3, 30])
+    with pytest.raises(UnsupportedTableFeatureError) as ei:
+        a.commit_tx()
+    assert ei.value.kind == "writer"
+    assert replay_log(a.store).version == 3  # neither a commit landed
+
+
+def test_commit_retry_reads_each_interleaved_record_once(tmp_path, monkeypatch):
+    """A commit retry reconciles every record in (collided version - 1,
+    latest] exactly once and reads each exactly once — also when the
+    kept snapshot moved forward during the tx (drop_table commits its
+    protocol stamp at the tx's own id after folding b's first commit)
+    — and the ICT floor rises from those records."""
+    store = _ReadCountingStore(str(tmp_path / "store"))
+    a = DeltaLakeClient(_NoSpark(), store)
+    b = DeltaLakeClient(_NoSpark(), store)
+    a.new_tx()
+    for t in ("ta", "tb", "tc"):
+        a.create_table(t, "k BIGINT, v BIGINT")
+    a.commit_tx()
+
+    a.new_tx()  # tx id 2
+    a.write_row("ta", [1, 1])
+    b._clock = lambda: 4_000_000_000.0  # far ahead of a's clock
+    b.new_tx()
+    b.write_row("tb", [1, 1])
+    b.commit_tx()  # v2
+    a.drop_table("tc")  # folds v2, commits the protocol stamp as v3
+    b.new_tx()
+    b.write_row("tb", [2, 2])
+    b.commit_tx()  # v4
+
+    reconciled = []
+    reconcile = a._reconcile_interleaved
+
+    def counting(tx, interleaved, my_tables, txn):
+        reconciled.append(interleaved["id"])
+        return reconcile(tx, interleaved, my_tables, txn)
+
+    monkeypatch.setattr(a, "_reconcile_interleaved", counting)
+    store.reads.clear()
+    a.commit_tx()
+
+    assert reconciled == [2, 3, 4]
+    for v in (2, 3, 4):
+        assert store.reads[log_name(v)] == 1
+    mine = read_record(store, 5)
+    assert mine["ts"] == max(read_record(store, v)["ts"] for v in (2, 3, 4)) + 1
+    snap = replay_log(store)
+    assert "tc" not in snap.tables
+    assert len(snap.live_objects("ta")) == 1
+    assert len(snap.live_objects("tb")) == 2

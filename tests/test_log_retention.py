@@ -108,9 +108,10 @@ def _seed_commits(root, n_commits, checkpoint_interval=32, store=None):
 
 @pytest.mark.slow
 def test_new_tx_metadata_cost_is_checkpoint_tail_at_depth(tmp_path):
-    """1 000+ commits (checkpoint every 32): a new_tx replays with
-    O(commits since checkpoint) LISTED KEYS and log reads — not the
-    1 001-key, 1 001-read full-prefix walk of the unanchored form."""
+    """1 000+ commits (checkpoint every 32): a cold client's new_tx
+    replays with O(commits since checkpoint) LISTED KEYS and log reads
+    — not the 1 001-key, 1 001-read full-prefix walk of the unanchored
+    form; the warm writer's new_tx folds only its own last commit."""
     store = CountingStore(str(tmp_path / "store"))
     c = _seed_commits(str(tmp_path / "store"), 1000, store=store)
     total = 1001  # create + 1000 writes
@@ -119,6 +120,15 @@ def test_new_tx_metadata_cost_is_checkpoint_tail_at_depth(tmp_path):
     store.reset()
     c.new_tx()
     c.abort_tx()
+    # the writer kept its snapshot: one anchored LIST, one record read
+    assert store.reads == {"_log_": 1}
+    assert store.listed_keys == {"_log_": 1}
+    assert store.list_calls == 1
+
+    store.reset()
+    cold = DeltaLakeClient(_NoSpark(), store)
+    cold.new_tx()
+    cold.abort_tx()
     # pointer read + checkpoint read + tail records; the log listing is
     # anchored past the checkpoint so only the tail keys come back
     assert store.reads.get("_last_checkpoint", 0) == 1
@@ -1186,6 +1196,7 @@ def test_metadata_scale_checkpoint_cost_is_o_changed_tables(
         part_writes = 0
         ckpt_reads = 0
         log_keys_listed = 0
+        log_lists = 0
 
         def read(self, name):
             if name.startswith(CHECKPOINT_PART_PREFIX):
@@ -1203,12 +1214,13 @@ def test_metadata_scale_checkpoint_cost_is_o_changed_tables(
             names = super().list_prefix_ordered(prefix, start_after=start_after)
             if prefix == LOG_PREFIX:
                 MeterStore.log_keys_listed += len(names)
+                MeterStore.log_lists += 1
             return names
 
         @classmethod
         def reset(cls):
             cls.part_reads = cls.part_writes = 0
-            cls.ckpt_reads = cls.log_keys_listed = 0
+            cls.ckpt_reads = cls.log_keys_listed = cls.log_lists = 0
 
     start = _time.time()
     store = MeterStore(str(tmp_path / "store"))
@@ -1245,14 +1257,27 @@ def test_metadata_scale_checkpoint_cost_is_o_changed_tables(
     full_writes = MeterStore.part_writes
     assert full_writes >= N_TABLES  # every table spilled
 
-    # new_tx on the checkpointed lake: O(tail) — one checkpoint read,
-    # ZERO part reads, a tail-anchored listing (not 12 records)
+    # a FRESH client's new_tx on the checkpointed lake: O(tail) — one
+    # checkpoint read, ZERO part reads, a tail-anchored listing (not 12
+    # records)
     MeterStore.reset()
-    c.new_tx()
-    c.abort_tx()
+    fresh = DeltaLakeClient(_NoSpark(), store, checkpoint_interval=12)
+    fresh.new_tx()
+    fresh.abort_tx()
     assert MeterStore.ckpt_reads == 1
     assert MeterStore.part_reads == 0
     assert MeterStore.log_keys_listed <= 2
+
+    # the WARM writer that published the checkpoint keeps its snapshot:
+    # its new_tx reads no checkpoint and no part, only one listing
+    # anchored at its kept version (nothing newer to fold)
+    MeterStore.reset()
+    c.new_tx()
+    c.abort_tx()
+    assert MeterStore.ckpt_reads == 0
+    assert MeterStore.part_reads == 0
+    assert MeterStore.log_lists == 1
+    assert MeterStore.log_keys_listed == 0
 
     # single-table touch hydrates exactly that table's parts (100 rows
     # -> 1 part)
@@ -1267,11 +1292,15 @@ def test_metadata_scale_checkpoint_cost_is_o_changed_tables(
     # checkpoint writes O(changed tables) parts — 1 fresh (plus the
     # hydration read that folding its tail requires), 999 reused with
     # ZERO reads or writes
+    MeterStore.reset()
     for _ in range(12):
         c.new_tx()
         c.write_row("t0500", [1, 1])
         c.commit_tx()
     assert newest_checkpoint_version(store) == 24
+    # the warm writer re-anchored its kept snapshot at the checkpoint it
+    # published: reaching the next one re-reads no checkpoint
+    assert MeterStore.ckpt_reads == 0
     MeterStore.reset()
     # count the incremental checkpoint's own cost via a re-run: the
     # meter above also saw the 12 commits, so re-derive from the
@@ -1556,3 +1585,165 @@ def test_log_format_has_one_owner():
                 and any(a.name == "LOG_PREFIX" for a in node.names)
             ]
     assert offenders == []
+
+
+def test_client_current_state_has_one_path():
+    """Every current-state snapshot in client.py goes through
+    ``_current_snapshot`` (the kept snapshot, advanced): the only
+    ``replay_log`` call without ``as_of`` is its cold/fallback path."""
+    import ast
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "delta_lake_experiment_spark",
+        "client.py",
+    )
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    unpinned = {}
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "replay_log"
+                and len(node.args) < 2
+                and not any(k.arg == "as_of" for k in node.keywords)
+            ):
+                unpinned[fn.name] = unpinned.get(fn.name, 0) + 1
+    assert unpinned == {"_current_snapshot": 1}
+
+
+def test_kept_snapshot_falls_back_when_vacuum_log_reclaims_its_tail(tmp_path):
+    """Another client's vacuum_log reclaims log records past this
+    client's kept version: the next new_tx replays and serves the
+    exact current state, never HistoryTruncatedError."""
+    root = str(tmp_path / "store")
+    a = _seed_commits(root, 2, checkpoint_interval=4)
+    a.new_tx()
+    a.abort_tx()  # a keeps v3
+    b = DeltaLakeClient(_NoSpark(), root, checkpoint_interval=4)
+    for i in range(8):
+        b.new_tx()
+        b.write_row("t", [100 + i, i])
+        b.commit_tx()
+    b.vacuum_log(min_age_seconds=0)
+    assert not b.store.exists(log_name(4))  # a's tail has a hole
+
+    a.new_tx()
+    fresh = replay_log(a.store)
+    assert a.tx.snapshot == fresh
+    assert a.tx.id == fresh.version + 1
+    assert sum(o.num_rows for o in a.tx.snapshot.live_objects("t")) == 10
+
+
+def _lazy_lake(root, monkeypatch, interval=5):
+    """Tables ``big`` (4 files, spilled to a sidecar part by the v5
+    checkpoint) and ``small`` (inline), committed by one client."""
+    import delta_lake_experiment_spark.plans.snapshot as snapmod
+
+    monkeypatch.setattr(snapmod, "CHECKPOINT_SIDECAR_MIN_ADDS", 4)
+    c = DeltaLakeClient(_NoSpark(), root, checkpoint_interval=interval)
+    c.new_tx()
+    c.create_table("big", "k BIGINT, v BIGINT")
+    c.create_table("small", "k BIGINT, v BIGINT")
+    c.commit_tx()
+    for i in range(4):
+        c.new_tx()
+        c.write_row("big", [i, i])
+        c.commit_tx()
+    assert newest_checkpoint_version(c.store) == 5
+    return c
+
+
+def test_kept_snapshot_falls_back_when_its_sidecar_parts_are_reclaimed(
+    tmp_path, monkeypatch
+):
+    """The kept snapshot's lazy sidecar parts are reclaimed after
+    another client rewrites that table: folding that rewrite cannot
+    hydrate the table, so the next new_tx replays instead."""
+    from delta_lake_experiment_spark.plans.snapshot import (
+        CHECKPOINT_PART_PREFIX,
+        checkpoint_part_prefix,
+    )
+
+    root = str(tmp_path / "store")
+    _lazy_lake(root, monkeypatch)
+    a = DeltaLakeClient(_NoSpark(), root, checkpoint_interval=5)
+    b = DeltaLakeClient(_NoSpark(), root, checkpoint_interval=5)
+    a.new_tx()
+    a.abort_tx()  # a keeps v5, "big" unhydrated
+    for i in range(4):
+        b.new_tx()
+        b.write_row("small", [i, i])
+        b.commit_tx()
+    a.new_tx()
+    a.abort_tx()  # a folds v6..v9 (only "small"): keeps v9
+    b.new_tx()
+    b.write_row("big", [9, 9])
+    b.commit_tx()  # v10: b's checkpoint spills "big" afresh
+    b.vacuum_log(min_age_seconds=0)
+    parts = b.store.list_prefix_ordered(CHECKPOINT_PART_PREFIX)
+    assert parts and all(p.startswith(checkpoint_part_prefix(10)) for p in parts)
+    assert b.store.exists(log_name(10))  # a's tail itself is dense
+
+    a.new_tx()
+    assert a.tx.snapshot == replay_log(a.store)
+    assert len(a.tx.snapshot.live_objects("big")) == 5
+
+
+def test_tx_views_never_reach_the_kept_snapshot(tmp_path, monkeypatch):
+    """A tx works on a copy of the kept snapshot: hydrating a lazy
+    table, writing and aborting, or drop_table's in-tx protocol fold
+    leave the kept snapshot equal to the committed state it holds."""
+    root = str(tmp_path / "store")
+    c = _lazy_lake(root, monkeypatch)
+
+    def assert_kept_is_committed_state():
+        kept = c._kept
+        assert kept == replay_log(c.store, as_of=kept.version)
+
+    c.new_tx()
+    assert len(c.write_manifest("big")) == 4  # hydrates the tx's "big"
+    c.write_row("big", [7, 7])
+    c.write_row("small", [7, 7])
+    c.abort_tx()
+    assert_kept_is_committed_state()
+
+    c.new_tx()
+    c.drop_table("small")  # commits the dropTable stamp as v6 first
+    c.abort_tx()
+    assert_kept_is_committed_state()
+    assert replay_log(c.store).version == 6
+    assert "small" in replay_log(c.store).tables
+
+
+def test_checkpoint_from_kept_snapshot_matches_a_cold_replay(
+    tmp_path, monkeypatch
+):
+    """Past another client's checkpoint, a writer checkpoints from a
+    replay anchored at it, as a cold client would: a table nobody
+    touched since then reuses that checkpoint's sidecar parts instead
+    of being spilled afresh from the writer's older kept snapshot."""
+    root = str(tmp_path / "store")
+    _lazy_lake(root, monkeypatch)
+    a = DeltaLakeClient(_NoSpark(), root, checkpoint_interval=5)
+    b = DeltaLakeClient(_NoSpark(), root, checkpoint_interval=5)
+    a.new_tx()
+    a.abort_tx()  # a keeps v5
+    for i in range(5):
+        b.new_tx()
+        b.write_row("big", [10 + i, i])
+        b.commit_tx()  # v6..v10; b's v10 checkpoint spills "big"
+    a.new_tx()
+    a.abort_tx()  # a folds v6..v10: "big" hydrated in a's kept snapshot
+    for i in range(5):
+        a.new_tx()
+        a.write_row("small", [i, i])
+        a.commit_tx()  # v11..v15; a's v15 checkpoint
+    from delta_lake_experiment_spark.plans.snapshot import checkpoint_name
+
+    ckpt = lambda v: json.loads(a.store.read(checkpoint_name(v)))
+    assert ckpt(15)["live_ref"]["big"] == ckpt(10)["live_ref"]["big"]
+
