@@ -408,6 +408,21 @@ class DeltaLakeClient:
                     attempt_id = latest.version + 1
                     if restamp:
                         self._restamp_tables(tx, restamp, stamps, attempt_id)
+            # the put can only land below the newest checkpoint when a
+            # vacuum_log freed the slot while this tx was open: readers
+            # anchor above it and would never see the record. One probe
+            # per commit, no LIST; the checkpoint read runs only when
+            # the probe says the predecessor is gone (or at version 1).
+            if (
+                attempt_id == 1 or self.store.exists(log_name(attempt_id - 1)) is False
+            ) and newest_checkpoint_version(self.store) >= attempt_id:
+                # take the record back so it cannot mask the gap from a
+                # warm reader parked below it; run_tx retries fresh
+                self.store.delete(log_name(attempt_id))
+                raise ConcurrentCommitError(
+                    f"tx {attempt_id}: the log was truncated past this"
+                    " version while the transaction was open"
+                )
             tx.id = attempt_id
             self._maybe_checkpoint(tx)
         finally:
@@ -3011,7 +3026,7 @@ actions.DropTable` for why clearing the live set on fold is
             row is not None for _, row in tx.buffers.get(table, [])
         ):
             return self.scan(table, with_stamps=False).count()
-        return int(sum(o.num_rows for o in snap.live_objects(table)))
+        return int(sum(o.num_rows for o in snap.live_map(table).values()))
 
     def describe_detail(self, table: str) -> DataFrame:
         """One-row table metadata report (Delta's DESCRIBE DETAIL):
@@ -3975,12 +3990,8 @@ actions.DropTable` for why clearing the live set on fold is
         # would miss pre-birth rows whose NULL logically reads as the
         # default.
         if not use_dv and column not in snap.defaults.get(table, {}):
-            cand_set = set(candidates)
-            cand_rows = sum(
-                o.num_rows
-                for o in snap.live_objects(table)
-                if self.store.path_of(o.name) in cand_set
-            )
+            live = snap.live_map(table)
+            cand_rows = sum(live[_basename_of_uri(p)].num_rows for p in candidates)
             if cand_rows <= _DRIVER_DELETE_MAX_ROWS:
                 # pure pyarrow + store API: works with no SparkSession at
                 # all (multiprocess OLTP workers delete through this path)
@@ -4409,33 +4420,29 @@ actions.DropTable` for why clearing the live set on fold is
         rows outside [start, end] or with NULL in the column; rewritten
         rows keep their original ``_tx_id``/``_row_idx`` stamps; prior
         deletion-vector masks are materialized into the rewrite."""
+        import numpy as np
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         # files carry physical names (column mapping)
         column = snap.col_maps.get(table, {}).get(column, column)
         table_dvs = snap.table_dvs(table)
-        # a COW rewrite of ONE object is a row subset of it, so the
-        # rewrite stays in the source object's bucket — carry the label
-        bucket_of = {o.name: o.bucket_id for o in snap.live_objects(table)}
-        dv_cache: dict[str, set] = {}
+        live = snap.live_map(table)
 
-        def _masked_rows(obj_name: str) -> set:
-            if obj_name not in dv_cache:
-                masked: set = set()
-                for dv_name in table_dvs.get(obj_name, []):
-                    dv_tbl = self._read_store_parquet(dv_name)
-                    for o, r in zip(dv_tbl["obj"].to_pylist(), dv_tbl["row_idx"].to_pylist()):
-                        if o == obj_name:
-                            masked.add(r)
-                dv_cache[obj_name] = masked
-            return dv_cache[obj_name]
+        def _masked_rows(obj_name: str) -> Optional[pa.Array]:
+            """Row positions of ``obj_name`` its deletion vectors mask."""
+            parts = []
+            for dv_name in table_dvs.get(obj_name, []):
+                dv_tbl = self._read_store_parquet(dv_name, columns=["obj", "row_idx"])
+                mine = dv_tbl.filter(pc.equal(dv_tbl["obj"], obj_name))["row_idx"]
+                parts.extend(c.cast(pa.int64()) for c in mine.chunks)
+            return pa.concat_arrays(parts) if parts else None
 
         with self._staging_dir() as staging:
             for i, path in enumerate(candidates):
-                tbl = self._read_store_parquet(_basename_of_uri(path))
                 obj_name = _basename_of_uri(path)
-                masked = _masked_rows(obj_name)
+                tbl = self._read_store_parquet(obj_name)
                 if column not in tbl.schema.names:
                     # pre-schema-evolution object: the column reads as
                     # all-NULL, NULLs never match a range -> untouched
@@ -4446,26 +4453,26 @@ actions.DropTable` for why clearing the live set on fold is
                 matched = pc.and_kleene(
                     pc.greater_equal(col, lo_b), pc.less_equal(col, hi_b)
                 )
-                keep_list = pc.fill_null(pc.invert(matched), True).to_pylist()
-                if masked:
-                    keep_list = [
-                        k and (j not in masked) for j, k in enumerate(keep_list)
-                    ]
-                survivors = tbl.filter(keep_list)
+                keep = pc.fill_null(pc.invert(matched), True)
+                masked = _masked_rows(obj_name)
+                if masked is not None:
+                    pos = pa.array(np.arange(len(tbl), dtype=np.int64))
+                    keep = pc.and_(keep, pc.invert(pc.is_in(pos, value_set=masked)))
+                survivors = tbl.filter(keep)
                 if len(survivors) == len(tbl):
                     continue  # untouched file stays as-is
                 if len(survivors):
                     tmp = os.path.join(staging, f"rw_{i}.parquet")
                     pq.write_table(survivors, tmp)
+                    # a COW rewrite of ONE object is a row subset of it,
+                    # so the rewrite stays in the source object's bucket
                     self._register_object(
                         table, tx, tmp,
-                        bucket_id=bucket_of.get(obj_name),
+                        bucket_id=live[obj_name].bucket_id,
                         rewrite=True,
                     )
                 tx.actions.append(
-                    RemoveDataObject(
-                        name=_basename_of_uri(path), table=table, tx_id=tx.id
-                    )
+                    RemoveDataObject(name=obj_name, table=table, tx_id=tx.id)
                 )
 
     # ------------------------------------------------------------------
@@ -6011,13 +6018,17 @@ actions.DropTable` for why clearing the live set on fold is
         bytes via the storage API instead — so the driver fast paths
         (small COW deletes, DV reads, materialization policy) work on
         every backend, not just local FS."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         if getattr(self.store, "root", None) is not None:
-            return pq.read_table(self.store.path_of(name), columns=columns)
-        import pyarrow as pa
-
-        return pq.read_table(pa.BufferReader(self.store.read(name)), columns=columns)
+            src = self.store.path_of(name)
+        else:
+            src = pa.BufferReader(self.store.read(name))
+        # one file needs no dataset discovery: ParquetFile reads it
+        # ~4x faster than pq.read_table on footer-sized objects
+        with pq.ParquetFile(src) as f:
+            return f.read(columns=columns)
 
     def _maybe_sidecar_blooms(self, blooms: dict[str, dict]) -> dict[str, dict]:
         """Spill oversized bloom bitsets to sidecar objects

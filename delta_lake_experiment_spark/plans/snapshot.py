@@ -512,20 +512,24 @@ class Snapshot:
         labeled with the key's bucket: an exact O(live/n) cut that
         composes with both stats and blooms (unlabeled objects are
         conservatively kept)."""
-        out = []
-        for obj in self.live_objects(table):
+        # filter the unordered map, then sort only what survives: the
+        # walk is O(live) but cheap, the sort O(kept log kept)
+        bounds = _decode_prune(prune) if prune else None
+        kept = []
+        for obj in self.live_map(table).values():
             if (
                 keep_buckets is not None
                 and obj.bucket_id is not None
                 and int(obj.bucket_id) not in keep_buckets
             ):
                 continue
-            if prune and not _stats_intersect(obj.stats, prune):
+            if bounds and not _stats_admit(obj.stats, bounds):
                 continue
             if prune and not _blooms_admit(obj.blooms, prune, store):
                 continue
-            out.append(store.path_of(obj.name))
-        return out
+            kept.append(obj)
+        kept.sort(key=lambda a: (a.tx_id, a.name))
+        return [store.path_of(obj.name) for obj in kept]
 
     def table_dvs(self, table: str) -> dict[str, list[str]]:
         """Masked data object name -> dv object names (live objects only)."""
@@ -869,7 +873,17 @@ class Snapshot:
 
 
 def _stats_intersect(stats: dict[str, list[Any]], prune: dict[str, tuple[Any, Any]]) -> bool:
-    for col, (lo, hi) in prune.items():
+    """Could a file with per-column [min, max] ``stats`` hold a row
+    inside every ``prune={col: (lo, hi)}`` range? Files without stats
+    for a column, and incomparable stats, are conservatively kept."""
+    return _stats_admit(stats, _decode_prune(prune))
+
+
+def _stats_admit(stats: dict[str, list[Any]], bounds: list[tuple]) -> bool:
+    """:func:`_stats_intersect` over bounds already decoded by
+    :func:`_decode_prune` (a pruning walk decodes once per call, not
+    once per file)."""
+    for col, lo, hi in bounds:
         rng = stats.get(col)
         if rng is None:
             continue  # no stats -> cannot prune this file
@@ -878,61 +892,82 @@ def _stats_intersect(stats: dict[str, list[Any]], prune: dict[str, tuple[Any, An
             continue
         try:
             if hi is not None:
-                smin, bhi = _stat_comparable(fmin, hi)
-                if smin is not None and smin > bhi:
+                pair = _stat_comparable(fmin, hi)
+                if pair is not None and pair[0] > pair[1]:
                     return False
             if lo is not None:
-                smax, blo = _stat_comparable(fmax, lo)
-                if smax is not None and smax < blo:
+                pair = _stat_comparable(fmax, lo)
+                if pair is not None and pair[0] < pair[1]:
                     return False
         except (TypeError, ValueError):
             continue  # incomparable types -> keep the file
     return True
 
 
-_EPOCH = None  # lazy: datetime import deferred off the hot import path
+# ``raw`` of a decoded datetime/date bound: untagged stats never
+# compare against it (the file is kept)
+_TEMPORAL = object()
+_DAY_US = 86_400_000_000
+_EPOCH_ORDINAL = 719_163  # date(1970, 1, 1).toordinal()
 
 
-def _stat_comparable(stat_v: Any, bound: Any):
-    """(comparable_stat, comparable_bound) for one stats-vs-bound
-    comparison, or (None, None) to skip. Temporal stats are stored as
-    tagged integer strings ('ts:<epoch micros>' / 'd:<ordinal day>' —
-    JSON has no datetime); temporal BOUNDS decode against them at the
-    matching granularity: timestamp-vs-date comparisons degrade to day
-    granularity, which can only under-prune, never wrongly prune.
-    String bounds against a tagged stat are parsed as ISO timestamps
-    (the SQL DML grammar produces plain-string literals for temporal
-    columns); an unparseable string keeps the file conservatively —
-    never compare a tag lexicographically against user text."""
+def _decode_prune(prune: dict[str, tuple[Any, Any]]) -> list[tuple]:
+    """``[(col, lo, hi)]`` with each non-None bound decoded once by
+    :func:`_decode_bound`."""
+    return [
+        (
+            col,
+            None if lo is None else _decode_bound(lo),
+            None if hi is None else _decode_bound(hi),
+        )
+        for col, (lo, hi) in prune.items()
+    ]
+
+
+def _decode_bound(bound: Any) -> tuple:
+    """``(raw, ts_us, ts_day, d_day)``: the forms a bound compares in
+    against each stat shape. Temporal stats are stored as tagged integer
+    strings ('ts:<epoch micros>' / 'd:<ordinal day>' — JSON has no
+    datetime); a temporal bound decodes to the matching granularity:
+    timestamp-vs-date comparisons degrade to day granularity, which can
+    only under-prune, never wrongly prune. String bounds against a
+    tagged stat are parsed as ISO timestamps (the SQL DML grammar
+    produces plain-string literals for temporal columns); an
+    unparseable string keeps the file conservatively — never compare a
+    tag lexicographically against user text. A None form means "keep
+    the file" for that stat shape."""
     import datetime as _dt
 
-    tagged = isinstance(stat_v, str) and (
-        stat_v.startswith("ts:") or stat_v.startswith("d:")
-    )
-    if tagged and isinstance(bound, str):
+    if isinstance(bound, str):
         try:
-            bound = _dt.datetime.fromisoformat(bound)
-        except ValueError:
-            return None, None
+            return (bound,) + _decode_bound(_dt.datetime.fromisoformat(bound))[1:]
+        except (ValueError, OverflowError):
+            return bound, None, None, None
     if isinstance(bound, _dt.datetime):
         if bound.tzinfo is not None:
             bound = bound.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        if isinstance(stat_v, str) and stat_v.startswith("ts:"):
-            micros = (bound - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-            return int(stat_v[3:]), micros
-        if isinstance(stat_v, str) and stat_v.startswith("d:"):
-            return int(stat_v[2:]), bound.date().toordinal()
-        return None, None
+        micros = (bound - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
+        return _TEMPORAL, micros, None, bound.date().toordinal()
     if isinstance(bound, _dt.date):
-        if isinstance(stat_v, str) and stat_v.startswith("ts:"):
-            day = _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=int(stat_v[3:]))
-            return day.date().toordinal(), bound.toordinal()
-        if isinstance(stat_v, str) and stat_v.startswith("d:"):
-            return int(stat_v[2:]), bound.toordinal()
-        return None, None
-    if tagged:
-        return None, None  # temporal stat vs non-temporal bound: keep file
-    return stat_v, bound
+        return _TEMPORAL, None, bound.toordinal(), bound.toordinal()
+    return bound, None, None, None
+
+
+def _stat_comparable(stat_v: Any, bound: tuple) -> Optional[tuple[Any, Any]]:
+    """(comparable_stat, comparable_bound) for one stat against a
+    decoded bound, or None to keep the file. The stat's tag only picks
+    which decoded form of the bound applies."""
+    raw, ts_us, ts_day, d_day = bound
+    if isinstance(stat_v, str):
+        if stat_v.startswith("ts:"):
+            if ts_us is not None:
+                return int(stat_v[3:]), ts_us
+            if ts_day is not None:
+                return int(stat_v[3:]) // _DAY_US + _EPOCH_ORDINAL, ts_day
+            return None
+        if stat_v.startswith("d:"):
+            return None if d_day is None else (int(stat_v[2:]), d_day)
+    return None if raw is _TEMPORAL else (stat_v, raw)
 
 
 def _blooms_admit(

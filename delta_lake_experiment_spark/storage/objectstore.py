@@ -101,8 +101,10 @@ class ObjectStorage(ABC):
     @abstractmethod
     def delete(self, name: str) -> None:
         """Remove an object (best-effort; missing object is not an
-        error). Used only by VACUUM — never by the commit protocol,
-        whose atomicity rests solely on put_if_absent."""
+        error). Used by VACUUM, and by ``commit_tx`` to take back a log
+        record that landed in a slot ``vacuum_log`` freed (below the
+        newest checkpoint, so no reader would see it). The commit
+        protocol's atomicity still rests solely on put_if_absent."""
 
     def put(self, name: str, data: bytes) -> None:
         """Overwrite ``name`` with ``data`` (create if missing).
@@ -142,7 +144,8 @@ class ObjectStorage(ABC):
         """Whether ``name`` exists, or None when the backend cannot
         answer cheaply (callers must then assume it might). Used by
         planning-time guards (e.g. the streaming source's
-        VACUUM-reclaimed check) — never by the commit protocol."""
+        VACUUM-reclaimed check) and by ``commit_tx``'s after-put probe
+        for a truncated predecessor; None there counts as present."""
         return None
 
 

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_experiment_spark.client import DeltaLakeClient
+from delta_lake_experiment_spark.plans.actions import RemoveDataObject
 from delta_lake_experiment_spark.plans.dml import (
     Delete,
     Insert,
@@ -981,3 +982,33 @@ def test_restore_to_timestamp_sql(spark, store_dir):
     c.new_tx()
     assert [r.k for r in c.scan("t", with_stamps=False).collect()] == [1]
     c.abort_tx()
+
+
+def test_point_delete_driver_path_costs_o_candidates(spark, store_dir, monkeypatch):
+    """The driver-side point delete touches the store per CANDIDATE
+    file, not per live object: on 300 one-row objects a delete of one
+    key resolves object paths only for the stat-pruned candidate (once
+    to plan, once to read it), never for the whole live set."""
+    c = DeltaLakeClient(spark, store_dir, dataobject_size=1)
+    c.new_tx()
+    c.create_table("t", "k BIGINT, v BIGINT")
+    for k in range(300):
+        c.write_row("t", [k, k])
+    c.commit_tx()
+
+    calls = []
+    path_of = c.store.path_of
+    monkeypatch.setattr(
+        c.store, "path_of", lambda name: calls.append(name) or path_of(name)
+    )
+    c.new_tx()
+    c.delete_rows("t", "k", 150, 150)
+    candidates = c.tx.read_files["t"]
+    rewrites = [a for a in c.tx.actions if isinstance(a, RemoveDataObject)]
+    assert len(candidates) == len(rewrites) == 1
+    assert len(calls) <= len(candidates) + len(rewrites)
+    c.commit_tx()
+
+    c.new_tx()
+    assert c.table_row_count("t") == 299
+    c.commit_tx()

@@ -1443,6 +1443,62 @@ def test_sql_temporal_string_bounds(spark, store_dir):
     c.commit_tx()
 
 
+_TS = ["ts:1704067200000000", "ts:1719748800000000"]  # 2024-01-01, 06-30 12:00
+_D = ["d:738886", "d:739067"]  # 2024-01-01, 2024-06-30
+
+
+@pytest.mark.parametrize(
+    "stats,lo,hi,admits",
+    [
+        # ts: stat against a naive datetime bound (micros)
+        (_TS, "dt:2024-03-01", "dt:2024-03-02", True),
+        (_TS, "dt:2024-07-01", "dt:2024-08-01", False),
+        # tz-aware bound converts to UTC before the compare: 06-30
+        # 13:00+02:00 is 11:00Z, inside; dropping the tz would prune
+        (_TS, "dt:2024-06-30T13:00+02:00", None, True),
+        (_TS, "dt:2024-06-30T15:00+02:00", None, False),
+        # ts: stat against a date bound: day granularity
+        (_TS, "date:2024-06-30", "date:2024-07-05", True),
+        (_TS, "date:2024-07-01", "date:2024-07-05", False),
+        # d: stat against a datetime bound: the bound's day
+        (_D, "dt:2024-06-30T23:59", None, True),
+        (_D, "dt:2024-07-01", None, False),
+        # ISO string against a tagged stat parses as a timestamp
+        (_TS, "2024-01-01", "2024-06-30", True),
+        (_TS, "2024-07-01", "2024-08-01", False),
+        (_D, "2024-07-01", None, False),
+        # unparseable string against a tagged stat: file kept
+        (_TS, "not a date", "also not", True),
+        # int against int, open-ended bounds included
+        ([1, 10], 5, 5, True),
+        ([1, 10], 11, 20, False),
+        ([1, 10], None, 0, False),
+        # a None stat: file kept
+        ([None, None], 11, 20, True),
+        # str stat against an int bound is incomparable: file kept
+        (["a", "z"], 1, 2, True),
+    ],
+)
+def test_stats_intersect_bound_shapes(stats, lo, hi, admits):
+    """Each bound is decoded once per pruning call; each stat shape
+    picks its form of the decoded bound. Pins every shape the
+    comparator accepts, pruning and keeping."""
+    import datetime as dt
+
+    from delta_lake_experiment_spark.plans.snapshot import _stats_intersect
+
+    def bound(b):
+        if isinstance(b, str) and b.startswith("dt:"):
+            return dt.datetime.fromisoformat(b[3:])
+        if isinstance(b, str) and b.startswith("date:"):
+            return dt.date.fromisoformat(b[5:])
+        return b
+
+    assert _stats_intersect({"c": stats}, {"c": (bound(lo), bound(hi))}) is admits
+    # a column without stats never prunes
+    assert _stats_intersect({}, {"c": (bound(lo), bound(hi))}) is True
+
+
 def test_scan_changes_net_diff(spark, store_dir):
     """Change data feed: snapshot diff reports inserts/deletes across
     COW deletes, DV deletes and appends — and compaction (pure rewrite)

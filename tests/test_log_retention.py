@@ -1747,3 +1747,35 @@ def test_checkpoint_from_kept_snapshot_matches_a_cold_replay(
     ckpt = lambda v: json.loads(a.store.read(checkpoint_name(v)))
     assert ckpt(15)["live_ref"]["big"] == ckpt(10)["live_ref"]["big"]
 
+
+
+def test_commit_into_a_vacuum_log_hole_fails_loudly(tmp_path):
+    """A tx left open while another client commits past two
+    checkpoints and runs vacuum_log finds its version slot freed below
+    the newest checkpoint, where no reader looks. The commit must not
+    report success there: it raises ConcurrentCommitError, takes its
+    record back, and run_tx's retry lands where readers see it."""
+    root = str(tmp_path / "store")
+    a = DeltaLakeClient(_NoSpark(), root, checkpoint_interval=4)
+    a.new_tx()
+    a.create_table("t", "k BIGINT, v BIGINT")
+    a.commit_tx()  # v1
+    b = DeltaLakeClient(_NoSpark(), root, checkpoint_interval=4)
+    b.new_tx()
+    assert b.tx.id == 2
+    b.write_row("t", [100, 100])
+    for i in range(8):
+        a.new_tx()
+        a.write_row("t", [i, i])
+        a.commit_tx()  # v2..v9, checkpoints at 4 and 8
+    assert a.vacuum_log(min_age_seconds=0) == 8
+    assert not a.store.exists(log_name(2))
+
+    with pytest.raises(ConcurrentCommitError):
+        b.commit_tx()
+    assert not b.store.exists(log_name(2))
+
+    b.run_tx(lambda c: c.write_row("t", [100, 100]))
+    fresh = DeltaLakeClient(_NoSpark(), root)
+    fresh.new_tx()
+    assert fresh.table_row_count("t") == 9
