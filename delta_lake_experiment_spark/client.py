@@ -88,6 +88,7 @@ from delta_lake_experiment_spark.plans.actions import (
     Protocol,
     RemoveDataObject,
 )
+from delta_lake_experiment_spark.plans import dv as dv_fmt
 from delta_lake_experiment_spark.plans.protocol import (
     FEATURE_CHECK_CONSTRAINTS,
     FEATURE_COLUMN_DEFAULTS,
@@ -2686,7 +2687,6 @@ actions.DropTable` for why clearing the live set on fold is
         table: str,
         prune: Optional[dict[str, tuple[Any, Any]]] = None,
         with_stamps: bool = True,
-        keep_buckets: "Optional[set[int]]" = None,
     ) -> DataFrame:
         """All live row versions as a DataFrame (snapshot + this tx's
         buffered rows). Unordered, like any DataFrame; order explicitly
@@ -2700,7 +2700,7 @@ actions.DropTable` for why clearing the live set on fold is
         schema = self.table_schema(table)
         stored = self._stored_schema(schema)
         snap = self._effective_snapshot(tx)
-        files = self._plan_files(tx, table, snap, prune, keep_buckets)
+        files = self._plan_files(tx, table, snap, prune)
         parts = []
         if files:
             parts.append(self._read_live(table, snap, stored, files, record=True))
@@ -2823,15 +2823,7 @@ actions.DropTable` for why clearing the live set on fold is
         )
         self._bucket_scans[table] = (cat_name, area)
         df = self.spark.table(cat_name)
-        live_names = {o.name for o in objs}
-        dv_names = sorted(
-            {
-                dv
-                for obj, dv_list in snap.table_dvs(table).items()
-                if obj in live_names
-                for dv in dv_list
-            }
-        )
+        dv_names = snap.dv_names(table, (o.name for o in objs))
         if dv_names:
             # join key = the object's uuid4 HEX id, extracted from BOTH
             # sides (globally unique across tables). Reconstructing the
@@ -2840,32 +2832,19 @@ actions.DropTable` for why clearing the live set on fold is
             # prefix, so the rebuilt key matched nothing and every
             # DV-deleted row resurrected in the clone's bucketed scan
             # (r13 review repro)
-            obj_name = F.regexp_extract(
+            obj_hex = F.regexp_extract(
                 F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
                 r"part-\d+-([0-9a-f]+)_\d+\.c000\.parquet",
                 1,
             )
-            dv_df = (
-                self.spark.read.parquet(*[self.store.path_of(x) for x in dv_names])
-                .select(
-                    F.regexp_extract(
-                        F.col("obj"), r"_([0-9a-f]+)\.parquet$", 1
-                    ).alias("__dv_obj"),
-                    F.col("row_idx").alias("__dv_ridx"),
-                )
+            mask = dv_fmt.mask_frame(
+                self.spark,
+                [self.store.path_of(x) for x in dv_names],
+                key=lambda name: F.regexp_extract(name, r"_([0-9a-f]+)\.parquet$", 1),
             )
-            df = (
-                df.withColumns(
-                    {"__obj": obj_name, "__ridx": F.col("_metadata.row_index")}
-                )
-                .join(
-                    F.broadcast(dv_df),
-                    (F.col("__obj") == F.col("__dv_obj"))
-                    & (F.col("__ridx") == F.col("__dv_ridx")),
-                    "left_anti",
-                )
-                .drop("__obj", "__ridx")
-            )
+            df = dv_fmt.mask_join(
+                dv_fmt.with_positions(df, obj_hex), F.broadcast(mask), "left_anti"
+            ).drop(*dv_fmt.POS)
         if pmap:
             # logical aliasing LAST: the `_metadata` captures above only
             # resolve on the scan relation
@@ -3587,16 +3566,12 @@ actions.DropTable` for why clearing the live set on fold is
                     for dv in set(to_dvs.get(o, [])) - set(from_dvs.get(o, []))
                 }
             )
-            mask = (
-                self.spark.read.parquet(*[self.store.path_of(n) for n in dv_names])
-                .filter(F.col("obj").isin(sorted(masked_objs)))
-                .select(F.col("obj").alias("__obj"), F.col("row_idx").alias("__ridx"))
+            mask = dv_fmt.mask_frame(
+                self.spark, [self.store.path_of(n) for n in dv_names], objs=masked_objs
             )
-            masked_rows = (
-                _rows(from_snap, sorted(masked_objs), with_pos=True)
-                .join(mask, ["__obj", "__ridx"], "left_semi")
-                .drop("__obj", "__ridx")
-            )
+            masked_rows = dv_fmt.mask_join(
+                _rows(from_snap, sorted(masked_objs), with_pos=True), mask, "left_semi"
+            ).drop(*dv_fmt.POS)
             deletes = deletes.unionByName(masked_rows)
 
         return inserts.withColumn("_change_type", F.lit("insert")).unionByName(
@@ -4351,10 +4326,7 @@ actions.DropTable` for why clearing the live set on fold is
         instead of rewriting data files — O(mask) written instead of
         O(affected files); scans apply the mask, compaction or a later
         COW rewrite materializes it. Returns rows masked (0 = no-op)."""
-        mask = positions.select(
-            F.col("__obj").alias("obj"), F.col("__ridx").alias("row_idx")
-        ).coalesce(1)
-        with self._staging_dir(mask) as staging:
+        with self._staging_dir(dv_fmt.to_payload(positions).coalesce(1)) as staging:
             part = next(
                 (f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")), None
             )
@@ -4363,22 +4335,22 @@ actions.DropTable` for why clearing the live set on fold is
             import pyarrow.parquet as pq
 
             src = os.path.join(staging, part)
-            dv_tbl = pq.read_table(src, columns=["obj"])
-            if dv_tbl.num_rows == 0:
+            counts = dv_fmt.masked_counts([pq.read_table(src, columns=[dv_fmt.OBJ])])
+            if not counts:
                 return 0
-            objects = sorted(set(dv_tbl["obj"].to_pylist()))
+            num_deleted = sum(counts.values())
             dv_name = f"dv_{table}_{uuid.uuid4().hex}.parquet"
             self.store.put_file_if_absent(dv_name, src)
             tx.actions.append(
                 AddDeletionVector(
                     table=table,
                     dv_name=dv_name,
-                    objects=objects,
+                    objects=sorted(counts),
                     tx_id=tx.id,
-                    num_deleted=dv_tbl.num_rows,
+                    num_deleted=num_deleted,
                 )
             )
-            return dv_tbl.num_rows
+            return num_deleted
 
     def _arrow_bound(self, pa_type, bound: Any) -> Any:
         """Align a Python datetime bound with an Arrow column's timestamp
@@ -4420,8 +4392,6 @@ actions.DropTable` for why clearing the live set on fold is
         rows outside [start, end] or with NULL in the column; rewritten
         rows keep their original ``_tx_id``/``_row_idx`` stamps; prior
         deletion-vector masks are materialized into the rewrite."""
-        import numpy as np
-        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -4429,15 +4399,6 @@ actions.DropTable` for why clearing the live set on fold is
         column = snap.col_maps.get(table, {}).get(column, column)
         table_dvs = snap.table_dvs(table)
         live = snap.live_map(table)
-
-        def _masked_rows(obj_name: str) -> Optional[pa.Array]:
-            """Row positions of ``obj_name`` its deletion vectors mask."""
-            parts = []
-            for dv_name in table_dvs.get(obj_name, []):
-                dv_tbl = self._read_store_parquet(dv_name, columns=["obj", "row_idx"])
-                mine = dv_tbl.filter(pc.equal(dv_tbl["obj"], obj_name))["row_idx"]
-                parts.extend(c.cast(pa.int64()) for c in mine.chunks)
-            return pa.concat_arrays(parts) if parts else None
 
         with self._staging_dir() as staging:
             for i, path in enumerate(candidates):
@@ -4447,18 +4408,21 @@ actions.DropTable` for why clearing the live set on fold is
                     # pre-schema-evolution object: the column reads as
                     # all-NULL, NULLs never match a range -> untouched
                     continue
-                col = tbl[column]
+                masked = dv_fmt.masked_positions(
+                    [
+                        self._read_store_parquet(n, columns=dv_fmt.COLUMNS)
+                        for n in table_dvs.get(obj_name, ())
+                    ],
+                    obj_name,
+                )
+                live_rows = dv_fmt.drop_positions(tbl, masked)
+                col = live_rows[column]
                 lo_b = self._arrow_bound(col.type, start)
                 hi_b = self._arrow_bound(col.type, end)
                 matched = pc.and_kleene(
                     pc.greater_equal(col, lo_b), pc.less_equal(col, hi_b)
                 )
-                keep = pc.fill_null(pc.invert(matched), True)
-                masked = _masked_rows(obj_name)
-                if masked is not None:
-                    pos = pa.array(np.arange(len(tbl), dtype=np.int64))
-                    keep = pc.and_(keep, pc.invert(pc.is_in(pos, value_set=masked)))
-                survivors = tbl.filter(keep)
+                survivors = live_rows.filter(pc.fill_null(pc.invert(matched), True))
                 if len(survivors) == len(tbl):
                     continue  # untouched file stays as-is
                 if len(survivors):
@@ -4798,12 +4762,10 @@ actions.DropTable` for why clearing the live set on fold is
         dv_map = snap.table_dvs(table)
         if not dv_map:
             return 0
-        import collections
-
-        counts: collections.Counter = collections.Counter()
-        for dv in sorted({d for dvl in dv_map.values() for d in dvl}):
-            t = self._read_store_parquet(dv, columns=["obj"])
-            counts.update(t["obj"].to_pylist())
+        counts = dv_fmt.masked_counts(
+            self._read_store_parquet(n, columns=[dv_fmt.OBJ])
+            for n in snap.dv_names(table, dv_map)
+        )
         heavy = [
             o.name
             for o in snap.live_objects(table)
@@ -5456,39 +5418,18 @@ actions.DropTable` for why clearing the live set on fold is
             return self._apply_defaults(snap, table, d, stored)
 
         df = self.spark.read.schema(self._phys_schema(stored, pmap)).parquet(*files)
-        live_names = {_basename_of_uri(p) for p in files}
-        dv_names = sorted(
-            {
-                dv
-                for obj, dv_list in snap.table_dvs(table).items()
-                if obj in live_names
-                for dv in dv_list
-            }
-        )
+        dv_names = snap.dv_names(table, (_basename_of_uri(p) for p in files))
         if not dv_names and not with_pos:
             return _logical(df)
-        df = df.withColumns(
-            {
-                "__obj": F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-                "__ridx": F.col("_metadata.row_index"),
-            }
+        df = dv_fmt.with_positions(
+            df, F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
         )
         if dv_names:
-            dv_df = (
-                self.spark.read.parquet(*[self.store.path_of(n) for n in dv_names])
-                .select(F.col("obj").alias("__dv_obj"), F.col("row_idx").alias("__dv_ridx"))
+            mask = dv_fmt.mask_frame(
+                self.spark, [self.store.path_of(n) for n in dv_names]
             )
-            df = df.join(
-                F.broadcast(dv_df),
-                (F.col("__obj") == F.col("__dv_obj"))
-                & (F.col("__ridx") == F.col("__dv_ridx")),
-                "left_anti",
-            )
-        return (
-            _logical(df, ("__obj", "__ridx"))
-            if with_pos
-            else _logical(df.drop("__obj", "__ridx"))
-        )
+            df = dv_fmt.mask_join(df, F.broadcast(mask), "left_anti")
+        return _logical(df, dv_fmt.POS) if with_pos else _logical(df.drop(*dv_fmt.POS))
 
     def flush_buffer(self, table: str) -> None:
         """Flush the table's buffered rows as data object(s) without
@@ -6101,15 +6042,13 @@ actions.DropTable` for why clearing the live set on fold is
             return max_idx
         max_idx: Optional[int] = None
         for fname in files:
-            path = os.path.join(staging, fname)
-            hi = _parquet_idx_max(path)
-            if hi is not None:
-                max_idx = hi if max_idx is None else max(max_idx, hi)
-            self._register_object(
-                table, tx, path,
+            hi = self._register_object(
+                table, tx, os.path.join(staging, fname),
                 bucket_id=_staged_bucket_id(fname) if bucketed else None,
                 rewrite=rewrite,
             )
+            if hi is not None:
+                max_idx = hi if max_idx is None else max(max_idx, hi)
         return max_idx
 
     def _register_object(
@@ -6119,14 +6058,16 @@ actions.DropTable` for why clearing the live set on fold is
         src_path: str,
         bucket_id: Optional[int] = None,
         rewrite: bool = False,
-    ) -> None:
+    ) -> Optional[int]:
+        """Publish one local Parquet file as a data object; returns its
+        largest ``_row_idx`` stamp (None when the file is empty)."""
         # NOTE: no leading underscore — Spark's file index treats `_`/`.`
         # prefixed files as hidden metadata and silently skips them (the
         # reference's `_table_` naming, dataobjects.go:51-57, would make
         # every data object invisible to the Parquet reader).
-        num_rows, stats = _parquet_file_stats(src_path)
+        num_rows, stats, idx_max = _parquet_file_stats(src_path)
         if num_rows == 0:
-            return  # empty partitions produce empty files; never log them
+            return None  # empty partitions produce empty files; never log them
         size = os.path.getsize(src_path)
         name = f"table_{table}_{uuid.uuid4().hex}.parquet"
         # zero-copy publish: staging lives under the store root, so this
@@ -6146,6 +6087,7 @@ actions.DropTable` for why clearing the live set on fold is
                 rewrite=rewrite,
             )
         )
+        return idx_max
 
     def _build_blooms(self, table: str, tx: _Tx, src_path: str) -> dict[str, dict]:
         """Per-file blooms for the table's declared bloom columns.
@@ -6521,62 +6463,50 @@ def _staged_bucket_id(fname: str) -> Optional[int]:
     return int(m.group(1))
 
 
-def _parquet_file_stats(path: str) -> tuple[int, dict[str, list[Any]]]:
-    """Footer-derived (num_rows, {col: [min, max]}) for prunable
-    primitive + temporal columns — the log-level data-skipping stats
-    the reference left as a TODO (README.md:37)."""
+def _parquet_file_stats(
+    path: str,
+) -> tuple[int, dict[str, list[Any]], Optional[int]]:
+    """Footer-derived (num_rows, {col: [min, max]}, max ``_row_idx``)
+    for prunable primitive + temporal columns — the log-level
+    data-skipping stats the reference left as a TODO (README.md:37).
+    The max stamp comes from the same row-group walk; a writer that
+    omits its int64 stats costs one read of just that column."""
     import pyarrow.parquet as pq
 
-    meta = pq.ParquetFile(path).metadata
+    pf = pq.ParquetFile(path)
+    meta = pf.metadata
     num_rows = meta.num_rows
     mins: dict[str, Any] = {}
     maxs: dict[str, Any] = {}
+    idx_max: Optional[int] = None
+    idx_read = False
     for rg in range(meta.num_row_groups):
         group = meta.row_group(rg)
         for ci in range(group.num_columns):
             col = group.column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
+            name, st = col.path_in_schema, col.statistics
+            has_stats = st is not None and st.has_min_max
+            if name == IDX_COL:
+                if not has_stats:
+                    idx_read = True
+                elif idx_max is None or int(st.max) > idx_max:
+                    idx_max = int(st.max)
                 continue
-            name = col.path_in_schema
-            if "." in name or name in (TX_COL, IDX_COL):
+            if not has_stats or "." in name or name == TX_COL:
                 continue
             mn, mx = st.min, st.max
             mins[name] = mn if name not in mins else min(mins[name], mn)
             maxs[name] = mx if name not in maxs else max(maxs[name], mx)
+    if idx_read and num_rows:
+        import pyarrow.compute as pc
+
+        idx_max = int(pc.max(pf.read(columns=[IDX_COL])[IDX_COL]).as_py())
     out = {}
     for c in mins:
         lo, hi = _encode_stat(mins[c]), _encode_stat(maxs[c])
         if lo is not None and hi is not None:
             out[c] = [lo, hi]
-    return num_rows, out
-
-
-def _parquet_idx_max(path: str) -> Optional[int]:
-    """Largest ``_row_idx`` in one staged Parquet file, from row-group
-    footer statistics (falls back to reading just that column if a
-    writer ever omits int64 stats). Metadata-only in practice."""
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    meta = pf.metadata
-    if meta.num_rows == 0:
-        return None
-    out: Optional[int] = None
-    for rg in range(meta.num_row_groups):
-        group = meta.row_group(rg)
-        for ci in range(group.num_columns):
-            col = group.column(ci)
-            if col.path_in_schema != IDX_COL:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                arr = pf.read(columns=[IDX_COL])[IDX_COL]
-                import pyarrow.compute as pc
-
-                return int(pc.max(arr).as_py())
-            out = int(st.max) if out is None else max(out, int(st.max))
-    return out
+    return num_rows, out, idx_max
 
 
 def _rmtree(path: str) -> None:

@@ -152,26 +152,6 @@ def minhash_signatures_hashed(
     )
 
 
-def minhash_signatures(
-    shingle_df: DataFrame, num_hashes: int = 16
-) -> DataFrame:
-    """(id, sig: array<long>) — per-document MinHash signature.
-
-    Hash family: ``xxhash64(seed, shingle)`` — seeding via an extra hash
-    input gives ``num_hashes`` independent 64-bit functions, all computed
-    in one projection, then one groupBy(id) with ``min`` partial-aggs
-    (map-side combine keeps the shuffle tiny: num_hashes longs per doc).
-    """
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"__h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = shingle_df.groupBy("__id").agg(*mins)
-    return sig.select(
-        "__id", F.array(*[f"__h{i}" for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def lsh_band_rows(
     sig_df: DataFrame, num_bands: int = 4, num_hashes: Optional[int] = None
 ) -> DataFrame:

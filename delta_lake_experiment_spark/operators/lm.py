@@ -163,8 +163,6 @@ def calibrated_score_filter(
     score_col: str,
     lo_q: float = 0.05,
     hi_q: float = 0.95,
-    strategy: str = "exact",
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """The filter step the scores exist for: keep rows whose
     ``score_col`` lies inside the corpus's own [lo_q, hi_q] percentile
@@ -172,31 +170,19 @@ def calibrated_score_filter(
     cut). Bounds are computed from the data, broadcast as one row, and
     applied as a plain filter; rows pass through otherwise unchanged.
 
-    ``strategy="exact"``: ``percentile()`` — a sort-based aggregate
+    Bounds are exact ``percentile()`` values — a sort-based aggregate
     whose single group concentrates every value in ONE aggregation
-    buffer; exact and oracle-checkable, but memory-bounded only at
-    fixture scale. ``strategy="approx"``: ``approx_percentile`` — the
-    mergeable t-digest-style sketch, bounded memory per task at any
-    corpus size; bounds then differ from exact by the sketch's rank
-    error (1/accuracy), which moves the cut by at most a few corpus
-    quantile steps — the 100 TB path (pytest pins approx-vs-exact
-    agreement on the fixture). Both strategies round bounds to 6
-    digits, matching the scores' own rounding, so the comparison is
-    over the same value grid on every engine.
+    buffer, so oracle-checkable but memory-bounded only at fixture
+    scale — rounded to 6 digits, matching the scores' own rounding, so
+    the comparison is over the same value grid on every engine.
     """
     if not 0.0 <= lo_q < hi_q <= 1.0:
         raise ValueError(f"need 0 <= lo_q < hi_q <= 1, got {lo_q!r}, {hi_q!r}")
     # backtick-quote: score_col may not be a bare identifier, and the
     # rest of the function handles such names via F.col just fine
     qcol = "`" + score_col.replace("`", "``") + "`"
-    if strategy == "exact":
-        lo = F.expr(f"percentile({qcol}, {lo_q})")
-        hi = F.expr(f"percentile({qcol}, {hi_q})")
-    elif strategy == "approx":
-        lo = F.expr(f"approx_percentile({qcol}, {lo_q}, {int(accuracy)})")
-        hi = F.expr(f"approx_percentile({qcol}, {hi_q}, {int(accuracy)})")
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    lo = F.expr(f"percentile({qcol}, {lo_q})")
+    hi = F.expr(f"percentile({qcol}, {hi_q})")
     # the scores DAG feeds BOTH the bounds aggregate and the filter
     # scan; persist so the (often expensive) scoring pipeline runs
     # once and both jobs see one evaluation — the deterministic_shuffle
@@ -331,8 +317,6 @@ def stratified_score_filter(
     strata_col: str,
     lo_q: float = 0.05,
     hi_q: float = 0.95,
-    strategy: str = "exact",
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Per-stratum :func:`calibrated_score_filter`: keep rows inside
     their OWN stratum's [lo_q, hi_q] score band. The global cut is
@@ -342,24 +326,17 @@ def stratified_score_filter(
     CCNet applies its perplexity cut per language for exactly this
     reason.
 
-    Same two strategies as the global filter: ``exact`` concentrates
-    each stratum (not the corpus) in one aggregation buffer — fine
-    when every stratum fits, and oracle-checkable; ``approx`` is the
-    mergeable-sketch bounded-memory path for 100 TB. Bounds are an
-    O(strata) aggregate joined back (AQE broadcasts it); rows pass
-    through otherwise unchanged. Rounding to 6 digits matches the
-    score grid (the lm-lane determinism argument)."""
+    Exact percentiles as in the global filter, which concentrates each
+    stratum (not the corpus) in one aggregation buffer — fine when every
+    stratum fits, and oracle-checkable. Bounds are an O(strata)
+    aggregate joined back (AQE broadcasts it); rows pass through
+    otherwise unchanged. Rounding to 6 digits matches the score grid
+    (the lm-lane determinism argument)."""
     if not 0.0 <= lo_q < hi_q <= 1.0:
         raise ValueError(f"need 0 <= lo_q < hi_q <= 1, got {lo_q!r}, {hi_q!r}")
     qcol = "`" + score_col.replace("`", "``") + "`"
-    if strategy == "exact":
-        lo = F.expr(f"percentile({qcol}, {lo_q})")
-        hi = F.expr(f"percentile({qcol}, {hi_q})")
-    elif strategy == "approx":
-        lo = F.expr(f"approx_percentile({qcol}, {lo_q}, {int(accuracy)})")
-        hi = F.expr(f"approx_percentile({qcol}, {hi_q}, {int(accuracy)})")
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    lo = F.expr(f"percentile({qcol}, {lo_q})")
+    hi = F.expr(f"percentile({qcol}, {hi_q})")
     from delta_lake_experiment_spark.functions.guards import null_checked
 
     scores = scores.persist()  # feeds bounds agg AND the filter scan
@@ -386,7 +363,7 @@ def stratified_score_filter_sql(
     lo_q: float,
     hi_q: float,
 ) -> str:
-    """DuckDB twin of :func:`stratified_score_filter` (exact strategy):
+    """DuckDB twin of :func:`stratified_score_filter`:
     per-stratum quantile_cont bounds, same 6-digit rounding."""
     return f"""
 SELECT d.* FROM {src} d

@@ -31,7 +31,7 @@ from __future__ import annotations
 import base64
 import hashlib
 from dataclasses import dataclass
-from typing import Any, Iterable, Optional
+from typing import Any, Optional
 
 # ~10 bits/value at k=7 gives ~1% false-positive rate.
 BITS_PER_VALUE = 10
@@ -110,10 +110,6 @@ class BloomFilter:
         for i in range(self.k):
             pos = (h1 + i * h2) % self.m
             self.bits[pos >> 3] |= 1 << (pos & 7)
-
-    def add_many(self, values: Iterable[Any]) -> None:
-        for v in values:
-            self.add(v)
 
     def might_contain(self, value: Any) -> bool:
         data = _tagged(value)

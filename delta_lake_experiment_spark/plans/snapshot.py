@@ -31,7 +31,7 @@ from __future__ import annotations
 import bisect
 import json
 from dataclasses import dataclass, field
-from typing import Any, Iterator, Optional
+from typing import Any, Iterable, Iterator, Optional
 
 from delta_lake_experiment_spark.errors import (
     HistoryTruncatedError,
@@ -535,6 +535,14 @@ class Snapshot:
         """Masked data object name -> dv object names (live objects only)."""
         return self.dvs.get(table, {})
 
+    def dv_names(self, table: str, objects: Iterable[str]) -> list[str]:
+        """Sorted names of the dv objects masking any of ``objects``
+        (empty, without walking ``objects``, when the table has none)."""
+        tdv = self.table_dvs(table)
+        if not tdv:
+            return []
+        return sorted({dv for o in objects for dv in tdv.get(o, ())})
+
     def apply(self, tx_id: int, actions: list[Action]) -> None:
         """Fold one committed transaction's actions into this snapshot."""
         for act in actions:
@@ -1031,11 +1039,9 @@ def newest_checkpoint_version(store: ObjectStorage) -> int:
     return ckpts[-1] if ckpts else 0
 
 
-def earliest_reconstructable_version(
-    store: ObjectStorage, at_least: int = 1
-) -> int:
-    """Oldest version >= ``at_least`` that ``replay_log(as_of=...)`` can
-    still serve after ``vacuum_log`` truncation: the oldest retained
+def earliest_reconstructable_version(store: ObjectStorage) -> int:
+    """Oldest version ``replay_log(as_of=...)`` can still serve after
+    ``vacuum_log`` truncation (1 with full history): the oldest retained
     checkpoint whose successor log records survive. Retained records
     form a version SUFFIX by construction — vacuum_log deletes at
     CHECKPOINT granularity, everything strictly below one cut — so the
@@ -1047,10 +1053,10 @@ def earliest_reconstructable_version(
     first_log = logs[0] if logs else None
     ckpts = checkpoint_versions(store)
     if first_log is None or first_log == 1:
-        return at_least  # full history retained
+        return 1  # full history retained
     for c in ckpts:
         if c + 1 >= first_log:
-            return max(c, at_least)
+            return c
     raise HistoryTruncatedError(
         "no retained checkpoint anchors the surviving log records -"
         " store metadata is inconsistent (vacuum_log never produces"

@@ -104,24 +104,6 @@ def write_partitioned(
     w.option("maxRecordsPerFile", target_rows_per_file).save(path)
 
 
-def export_table(
-    client,
-    table: str,
-    path: str,
-    format: str = "parquet",
-    partition_by: Sequence[str] = (),
-) -> None:
-    """Export an engine table's current snapshot to an external sink —
-    the engine-to-lake hand-off (CSV, JSONL, or Parquet out)."""
-    df = client.scan(table, with_stamps=False)
-    if format == "csv":
-        df.write.mode("overwrite").option("header", True).csv(path)
-    elif format in ("json", "jsonl"):
-        df.write.mode("overwrite").json(path)
-    else:
-        write_partitioned(df, path, partition_by=partition_by, format=format)
-
-
 def read_media_files(
     spark: SparkSession,
     path: str,

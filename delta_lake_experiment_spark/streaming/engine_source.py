@@ -87,6 +87,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from delta_lake_experiment_spark.plans import dv as dv_fmt
 from delta_lake_experiment_spark.plans.snapshot import (
     dense_tail,
     log_versions,
@@ -962,27 +963,25 @@ def _shape_logical(tbl, columns, defaults, with_stamps: bool):
     return pa.table(arrays, names=names)
 
 
+def _masked_positions(dv_paths, obj_name: str):
+    """Row positions of ``obj_name`` the dv objects at ``dv_paths``
+    mask (None when nothing is masked)."""
+    import pyarrow.parquet as pq
+
+    return dv_fmt.masked_positions(
+        [pq.read_table(p, columns=dv_fmt.COLUMNS) for p in dv_paths], obj_name
+    )
+
+
 def _read_engine_file(part: EngineFilePartition) -> Iterator[Any]:
     """Read one data object in the table's logical shape: DV-mask rows
     out, then the shared logical projection. Pure pyarrow — runs in
     the Python data source worker on executors."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tbl = pq.read_table(part.path)
-    if part.dv_paths:
-        masked: set[int] = set()
-        for p in part.dv_paths:
-            dv = pq.read_table(p, columns=["obj", "row_idx"])
-            objs = dv.column("obj").to_pylist()
-            idxs = dv.column("row_idx").to_pylist()
-            masked.update(i for o, i in zip(objs, idxs) if o == part.obj_name)
-        if masked:
-            import numpy as np
-
-            keep = np.ones(tbl.num_rows, dtype=bool)
-            keep[np.fromiter(masked, dtype=np.int64)] = False  # O(mask), not O(rows)
-            tbl = tbl.filter(pa.array(keep))
+    tbl = dv_fmt.drop_positions(
+        pq.read_table(part.path), _masked_positions(part.dv_paths, part.obj_name)
+    )
     out = _shape_logical(tbl, part.columns, part.defaults, part.with_stamps)
     for batch in out.to_batches():
         yield batch
@@ -1031,15 +1030,6 @@ def _read_engine_cdf(part: EngineCdfPartition) -> Iterator[Any]:
         (physical, _arrow_type(typ)) for _, physical, typ in part.columns
     ] + [(_TX_COL, pa.int64()), (_IDX_COL, pa.int64())]
 
-    def _mask_rows(tbl, masked: set):
-        if not masked:
-            return tbl
-        import numpy as np
-
-        keep = np.ones(tbl.num_rows, dtype=bool)
-        keep[np.fromiter(masked, dtype=np.int64)] = False
-        return tbl.filter(pa.array(keep))
-
     def _normalize(tbl):
         cols = []
         for name, typ in wanted:
@@ -1049,17 +1039,6 @@ def _read_engine_cdf(part: EngineCdfPartition) -> Iterator[Any]:
                 cols.append(pa.nulls(tbl.num_rows, type=typ))
         return pa.table(cols, names=[n for n, _ in wanted])
 
-    def _prior_mask(obj_name: str, dv_paths) -> set:
-        masked: set = set()
-        for p in dv_paths:
-            dv = pq.read_table(p, columns=["obj", "row_idx"])
-            for o, i in zip(
-                dv.column("obj").to_pylist(), dv.column("row_idx").to_pylist()
-            ):
-                if o == obj_name:
-                    masked.add(int(i))
-        return masked
-
     def _union(entries):
         # entries: [(path, obj_name, prior-dv paths)] — prior deletion
         # vectors apply BEFORE the anti-join, matching scan_changes'
@@ -1068,7 +1047,9 @@ def _read_engine_cdf(part: EngineCdfPartition) -> Iterator[Any]:
         # or compaction retires its file (the rewrite materialized the
         # mask, so the raw removed file is wider than the live rows)
         tbls = [
-            _normalize(_mask_rows(pq.read_table(p), _prior_mask(o, dvs)))
+            _normalize(
+                dv_fmt.drop_positions(pq.read_table(p), _masked_positions(dvs, o))
+            )
             for p, o, dvs in entries
         ]
         tbls = [t for t in tbls if t.num_rows]
@@ -1115,14 +1096,11 @@ def _read_engine_cdf(part: EngineCdfPartition) -> Iterator[Any]:
     _emit(_anti(removed, added), "delete")
     # newly DV-masked positions of files this commit did NOT remove
     for dv_path, targets in part.dvs:
-        dv = pq.read_table(dv_path, columns=["obj", "row_idx"])
-        by_obj: dict[str, list[int]] = {}
-        for o, i in zip(dv.column("obj").to_pylist(), dv.column("row_idx").to_pylist()):
-            if o in targets:
-                by_obj.setdefault(o, []).append(int(i))
-        for obj, idxs in sorted(by_obj.items()):
-            tbl = pq.read_table(targets[obj]).take(sorted(idxs))
-            _emit(tbl, "delete")
+        payload = [pq.read_table(dv_path, columns=dv_fmt.COLUMNS)]
+        for obj in sorted(targets):
+            pos = dv_fmt.masked_positions(payload, obj)
+            if pos is not None:
+                _emit(pq.read_table(targets[obj]).take(pos), "delete")
     for tbl in out_parts:
         for batch in tbl.to_batches():
             yield batch

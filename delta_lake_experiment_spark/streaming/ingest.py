@@ -651,38 +651,6 @@ def foreach_batch_semantic_dedup_writer(
     return process
 
 
-def write_semantic_dedup_stream_to_table(
-    stream_df: DataFrame,
-    client_factory,
-    corpus_table: str,
-    index_table: str,
-    centroids_table: str,
-    id_col: str,
-    vec_col: str,
-    app_id: str,
-    checkpoint_dir: str,
-    **dedup_kwargs,
-):
-    """Start an AvailableNow stream draining through the semantic
-    admission gate into engine ``corpus_table`` (+ its index table);
-    returns the StreamingQuery — the triad's third convenience
-    wrapper, symmetric with :func:`write_dedup_stream_to_table` and
-    :func:`write_fuzzy_dedup_stream_to_table`. ``dedup_kwargs``
-    forward to :func:`foreach_batch_semantic_dedup_writer`."""
-    return (
-        stream_df.writeStream.foreachBatch(
-            foreach_batch_semantic_dedup_writer(
-                client_factory, corpus_table, index_table,
-                centroids_table, id_col, vec_col, app_id,
-                **dedup_kwargs,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def write_fuzzy_dedup_stream_to_table(
     stream_df: DataFrame,
     client_factory,

@@ -2897,10 +2897,8 @@ def lm_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The calibrated LM filter (operators/lm.py::
     calibrated_score_filter): score every document, keep those inside
     the corpus's own [p05, p95] avg_logprob band — the CCNet two-sided
-    cut, with the exact-percentile strategy so the whole
-    score->calibrate->filter composition is value-oracled (the approx
-    sketch strategy is the 100 TB path, pytest-pinned against this
-    one)."""
+    cut, with exact percentiles so the whole score->calibrate->filter
+    composition is value-oracled."""
     from delta_lake_experiment_spark.operators.lm import (
         calibrated_score_filter,
         unigram_logprob_scores,
@@ -2909,7 +2907,7 @@ def lm_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     scores = unigram_logprob_scores(docs, "doc_id", "text")
     return calibrated_score_filter(
-        scores, "avg_logprob", lo_q=_LM_LO_Q, hi_q=_LM_HI_Q, strategy="exact"
+        scores, "avg_logprob", lo_q=_LM_LO_Q, hi_q=_LM_HI_Q
     ).select("doc_id", "n_tokens", "avg_logprob")
 
 
@@ -2934,8 +2932,7 @@ def lang_lm_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     OWN language's [p05, p95] avg_logprob band — the CCNet per-language
     cut; a single global band would systematically delete whole
     low-resource languages ranked low by the shared model. Exact
-    strategy here (value-oracled); the approx sketch is the 100 TB
-    path, pytest-pinned."""
+    percentiles, value-oracled."""
     from delta_lake_experiment_spark.operators.lm import (
         stratified_score_filter,
         unigram_logprob_scores,
@@ -2946,8 +2943,7 @@ def lang_lm_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "lang"), "doc_id"
     )
     return stratified_score_filter(
-        scores, "avg_logprob", "lang", lo_q=_LM_LO_Q, hi_q=_LM_HI_Q,
-        strategy="exact",
+        scores, "avg_logprob", "lang", lo_q=_LM_LO_Q, hi_q=_LM_HI_Q
     ).select("doc_id", "lang", "n_tokens", "avg_logprob")
 
 

@@ -1260,24 +1260,18 @@ def test_bulk_ingest_blooms_distributed(spark, store_dir, monkeypatch):
     c.create_table("t", "k BIGINT, s STRING, v BIGINT", bloom_columns=["k", "s"])
     c.commit_tx()
 
-    calls = {"footer": 0, "blooms": 0, "idxmax": 0}
+    calls = {"footer": 0, "blooms": 0}
     orig_stats = client_mod._parquet_file_stats
-    orig_idx = client_mod._parquet_idx_max
 
     def _counting_stats(path):
         calls["footer"] += 1
         return orig_stats(path)
-
-    def _counting_idx(path):
-        calls["idxmax"] += 1
-        return orig_idx(path)
 
     def _counting_blooms(self, *a, **k):
         calls["blooms"] += 1
         return {}
 
     monkeypatch.setattr(client_mod, "_parquet_file_stats", _counting_stats)
-    monkeypatch.setattr(client_mod, "_parquet_idx_max", _counting_idx)
     monkeypatch.setattr(DeltaLakeClient, "_build_blooms", _counting_blooms)
 
     # nulls in the bloom columns force the Arrow->pandas float64 path
@@ -1289,7 +1283,7 @@ def test_bulk_ingest_blooms_distributed(spark, store_dir, monkeypatch):
         "t", spark.createDataFrame(rows, "k BIGINT, s STRING, v BIGINT").coalesce(1)
     )
     c.commit_tx()
-    assert calls == {"footer": 0, "blooms": 0, "idxmax": 0}, calls
+    assert calls == {"footer": 0, "blooms": 0}, calls
 
     c.new_tx()
     snap = c._effective_snapshot(c.tx)
